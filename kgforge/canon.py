@@ -453,10 +453,11 @@ def canonicalize(
     (mapping(url, canon_url), metrics).
 
     `info`, when passed, receives connected_components' branch decision
-    ({branch, n_edges_probed, threshold}) the moment this returns — the
-    CC probe is eager, so callers that must persist the decision without
-    forcing the (lazy, block-table-sized) metrics frame can write these
-    three scalars instead (run_pipeline does, to _metrics_canon).
+    ({branch, n_edges_probed, threshold}) the moment this returns. The
+    metrics frame carries the same decision as its cc_branch and
+    cc_threshold rows next to the dropped LSH blocks; it filters the
+    checkpointed block-size table, so writing it (run_pipeline does, to
+    _metrics_canon) costs no pass over the blocks.
 
     The blocking stages shuffle 8-byte xxhash64 ids ("iid") instead of
     ~50-byte url strings — 3-6x less exchange volume through the

@@ -10,10 +10,11 @@ Manifest layout (out_dir/_checkpoints/<stage>.json):
   {run_id, stage, rows_out, wall_s, finished_ts, input_fingerprint}
 
 A stage runs only when its manifest entry is missing or its input
-fingerprint changed. Stage outputs are parquet directories written
-atomically by Spark (job-level commit protocol), so a killed run leaves
-either a complete stage or no manifest entry — the kill-and-rerun test
-covers both sides.
+fingerprint changed. A skipped stage reports the rows_out its manifest
+recorded, so a resume reads every count without touching the data.
+Stage outputs are parquet directories written atomically by Spark
+(job-level commit protocol), so a killed run leaves either a complete
+stage or no manifest entry — the kill-and-rerun test covers both sides.
 
 On a real cluster with Iceberg jars, `input_fingerprint` is the source
 snapshot id and stage outputs are Iceberg overwritePartitions; the logic
@@ -53,19 +54,18 @@ class CheckpointManager:
     def _data_path(self, stage: str) -> str:
         return os.path.join(self.out_dir, stage)
 
-    def is_done(self, stage: str, input_fingerprint: str = "") -> bool:
-        p = self._manifest_path(stage)
-        if not os.path.exists(p):
-            return False
+    def _finished(self, stage: str, input_fingerprint: str = "") -> dict | None:
+        """The stage's manifest when it finished for this input, else None."""
         try:
-            with open(p) as f:
+            with open(self._manifest_path(stage)) as f:
                 m = json.load(f)
         except (OSError, json.JSONDecodeError):
-            return False
-        if m.get("input_fingerprint") != input_fingerprint:
-            return False
+            return None
         # the data must actually exist (a deleted output invalidates)
-        return os.path.exists(os.path.join(self._data_path(stage), "_SUCCESS"))
+        done = m.get("input_fingerprint") == input_fingerprint and os.path.exists(
+            os.path.join(self._data_path(stage), "_SUCCESS")
+        )
+        return m if done else None
 
     def run_stage(
         self,
@@ -79,8 +79,9 @@ class CheckpointManager:
         reload the persisted output (no recompute; the resume test
         asserts this via the manifest timestamps)."""
         path = self._data_path(stage)
-        if self.is_done(stage, input_fingerprint):
-            self.results.append(StageResult(stage, -1, 0.0, skipped=True))
+        done = self._finished(stage, input_fingerprint)
+        if done is not None:
+            self.results.append(StageResult(stage, done["rows_out"], 0.0, skipped=True))
             return self.spark.read.parquet(path)
         t0 = time.time()
         df = build()

@@ -55,7 +55,9 @@ NEAR_DUP_THRESHOLD = 0.8
 
 
 def spark_cpus() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """Task slots: SPARK_GRAFT_CPUS when set, else the cores this process
+    may run on — a plain run never oversubscribes its host."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def _local_dirs() -> str | None:

@@ -43,6 +43,7 @@ from __future__ import annotations
 
 import os
 import re
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -51,10 +52,12 @@ from pyspark.sql.window import Window
 from kgforge import canon as C
 from kgforge import emit as E
 from kgforge import ontology as O
+from kgforge.checkpoint import CheckpointManager, _footer_row_count
 from kgforge.conf import NEAR_DUP_THRESHOLD
-from kgforge.link import attach_qualifiers, link_mentions
-from kgforge.mentions import detect_mentions
 from kgforge.extract import extract_pages
+from kgforge.link import link_mentions
+from kgforge.mentions import detect_mentions
+from kgforge.operators import bloom as B
 
 _BATCH_RE = re.compile(r"^batch-(\d{5})$")
 
@@ -70,6 +73,20 @@ def _next_batch(out_dir: str) -> str:
     dirs = _increment_dirs(out_dir)
     n = int(_BATCH_RE.match(dirs[-1]).group(1)) + 1 if dirs else 1
     return f"batch-{n:05d}"
+
+
+def read_committed(
+    spark: SparkSession, out_dir: str, base: str, increment: str, cols: list[str]
+) -> DataFrame:
+    """`cols` of the base stage `base` plus every committed increment's
+    `increment` output — the corpus as later batches and replay guards
+    must see it, including pages that arrived incrementally."""
+    incs = (
+        os.path.join(out_dir, "increments", d, increment)
+        for d in _increment_dirs(out_dir)
+    )
+    paths = [os.path.join(out_dir, base), *filter(os.path.isdir, incs)]
+    return spark.read.parquet(*paths).select(*cols)
 
 
 def _ensure_signature_sidecar(spark: SparkSession, out_dir: str) -> str:
@@ -96,7 +113,10 @@ def _capped_block_join(
     equivalence property test's contract)."""
     sn = new_blocks.groupBy("bk").agg(F.count(F.lit(1)).alias("n_new"))
     sb = base_blocks.groupBy("bk").agg(F.count(F.lit(1)).alias("n_base"))
-    sizes = sn.join(sb, "bk")  # only blocks present on BOTH sides matter
+    # only blocks present on BOTH sides matter; materialized once, so the
+    # pairs join and the dropped-block count do not each re-aggregate the
+    # base block table
+    sizes = sn.join(sb, "bk").localCheckpoint(eager=True)
     keep = sizes.filter(
         (F.col("n_new") + F.col("n_base")) <= max_block
     ).select("bk")
@@ -154,26 +174,15 @@ def incremental_update(
     langs: tuple[str, ...] | None = ("en",),
     threshold: float = NEAR_DUP_THRESHOLD,
     auto_compact_after: int | None = 8,
-    bloom_prefilter: bool = True,
 ) -> dict:
     # canonical mapping = base stage PLUS every prior increment's mapping,
     # so a batch can anchor to pages introduced by earlier batches (their
-    # signatures are already in the sidecar)
-    base_mapping = spark.read.parquet(os.path.join(out_dir, "canon_mapping"))
-    for d in _increment_dirs(out_dir):
-        mp = os.path.join(out_dir, "increments", d, "mapping")
-        if os.path.isdir(mp):
-            base_mapping = base_mapping.unionByName(spark.read.parquet(mp))
-    # extracted text likewise: base stage plus prior batches' extracted,
-    # so exact verification can read a prior batch's page text
-    base_ext = spark.read.parquet(os.path.join(out_dir, "extracted"))
-    for d in _increment_dirs(out_dir):
-        ep = os.path.join(out_dir, "increments", d, "extracted")
-        if os.path.isdir(ep):
-            base_ext = base_ext.select("url", "text").unionByName(
-                spark.read.parquet(ep).select("url", "text")
-            )
-    base_ext = base_ext.select("url", "text")
+    # signatures are already in the sidecar); extracted text likewise, so
+    # exact verification can read a prior batch's page text
+    base_mapping = read_committed(
+        spark, out_dir, "canon_mapping", "mapping", ["url", "canon_url"]
+    )
+    base_ext = read_committed(spark, out_dir, "extracted", "extracted", ["url", "text"])
     sig_path = _ensure_signature_sidecar(spark, out_dir)
     # dropDuplicates: a crash between the sidecar append and the batch
     # rename re-appends the same (url, sig) rows on retry; signatures
@@ -191,31 +200,45 @@ def incremental_update(
         .join(base_mapping.select("url"), "url", "left_semi")
     )
 
-    dic = O.propagate_hierarchy(O.clean_dictionary(spark.read.parquet(dict_path)))
-    aliases = O.collect_aliases(O.linker_dictionary(dic))
+    # crash-safe publication: every batch artifact is a checkpointed
+    # stage of a hidden temp dir; the final os.rename is the atomic
+    # commit point. _increment_dirs only matches ^batch-\d{5}$, so a
+    # half-written .batch-NNNNN.tmp from a crashed run is invisible to
+    # read_triples and removed on retry — no partial batch can ever
+    # enter the merge-on-read view. The signature append still precedes
+    # the rename (a batch must never be visible without its sigs); a
+    # crash between the two can leave duplicate sidecar rows, which the
+    # dropDuplicates on read absorbs.
+    batch = _next_batch(out_dir)
+    inc_dir = os.path.join(out_dir, "increments", batch)
+    tmp_dir = os.path.join(out_dir, "increments", f".{batch}.tmp")
+    shutil.rmtree(tmp_dir, ignore_errors=True)
+    cp = CheckpointManager(spark, tmp_dir, batch)
 
-    ext = extract_pages(spark.read.parquet(new_pages_path), langs).cache()
+    dic, aliases = O.linker_inputs(spark.read.parquet(dict_path))
+    ext = cp.run_stage(
+        "extracted",
+        lambda: extract_pages(spark.read.parquet(new_pages_path), langs),
+    )
     cands = link_mentions(detect_mentions(ext, aliases), dic).cache()
 
     # --- canonicalization delta -----------------------------------------
     new_sigs = C.minhash_signatures(ext, "text", "url").localCheckpoint(eager=True)
     new_blocks = C.lsh_blocks(new_sigs, id_col="url")
-    base_blocks = C.lsh_blocks(base_sigs, id_col="url")
-    if bloom_prefilter:
-        # Constant-size prefilter for the base side of the block join:
-        # a Bloom bitmap over the BATCH's band keys (the small side)
-        # drops base blocks whose key definitely has no partner, before
-        # the base-side groupBy shuffle — at corpus scale the base
-        # block table dwarfs the batch's, and most of its keys have no
-        # match. Exactly output-preserving: _capped_block_join is inner
-        # on bk on both the sizes and pairs paths, the per-bk prune
-        # keeps surviving blocks whole (the probe key IS bk), and false
-        # positives merely ride through to the join that was already
-        # going to discard them (pytest asserts run parity on/off).
-        from kgforge.operators import bloom as B
-
-        nb_bloom = B.bloom_build(new_blocks.select("bk"), B.h64_xx(F.col("bk")))
-        base_blocks = B.bloom_prune(base_blocks, B.h64_xx(F.col("bk")), nb_bloom)
+    # Constant-size prefilter for the base side of the block join: a
+    # Bloom bitmap over the BATCH's band keys (the small side) drops
+    # base blocks whose key definitely has no partner, before the
+    # base-side groupBy shuffle — at corpus scale the base block table
+    # dwarfs the batch's, and most of its keys have no match. Exactly
+    # output-preserving: _capped_block_join is inner on bk on both the
+    # sizes and pairs paths, the per-bk prune keeps surviving blocks
+    # whole (the probe key IS bk), and false positives merely ride
+    # through to the join that was already going to discard them
+    # (pytest asserts run parity with the prune disabled).
+    nb_bloom = B.bloom_build(new_blocks.select("bk"), B.h64_xx(F.col("bk")))
+    base_blocks = B.bloom_prune(
+        C.lsh_blocks(base_sigs, id_col="url"), B.h64_xx(F.col("bk")), nb_bloom
+    )
     nb_pairs, nb_dropped = _capped_block_join(
         new_blocks, base_blocks, C.MAX_LSH_BLOCK
     )
@@ -225,7 +248,7 @@ def incremental_update(
     # a candidate pair (left-semi pruned scan of the stored stage)
     base_cand_urls = nb_pairs.select(F.col("b").alias("url")).distinct()
     texts = ext.select("url", "text").unionByName(
-        base_ext.join(base_cand_urls, "url", "left_semi").select("url", "text")
+        base_ext.join(base_cand_urls, "url", "left_semi")
     )
     v_nb = C.verify_pairs_jaccard(nb_pairs, texts, threshold).cache()
     v_nn = C.verify_pairs_jaccard(nn_pairs, texts, threshold)
@@ -259,29 +282,20 @@ def incremental_update(
         .agg(F.min("anchor").alias("comp_anchor"), F.min("url").alias("comp_min"))
     )
     deferred = deferred_merge_count(node_comp, url_anchor)
-    mapping_new = (
-        node_comp.join(F.broadcast(comp_anchor), "comp")
-        .select(
+    mapping_new = cp.run_stage(
+        "mapping",
+        lambda: node_comp.join(F.broadcast(comp_anchor), "comp").select(
             "url",
             F.coalesce("comp_anchor", "comp_min").alias("canon_url"),
-        )
-        .localCheckpoint(eager=True)
+        ),
     )
 
     # --- emission --------------------------------------------------------
+    # the full run's emitters, with their observed spans replaced by the
+    # stored span of each subject (if any) widened by the batch's
+    # per-subject min/max — lexicographic min/max on the ISO obj halves;
+    # curated ('A') stored spans are never overridden
     sparse = mapping_new.filter(F.col("url") != F.col("canon_url"))
-    qualified = attach_qualifiers(cands)
-    delta = (
-        E.emit_page_triples(ext, sparse)
-        .unionByName(E.emit_entity_triples(qualified, sparse))
-        .unionByName(E.emit_measurement_triples(cands, sparse))
-        .unionByName(E.emit_sameas_triples(sparse))
-        .distinct()
-    )
-
-    # merged span rows: stored observed span (if any) widened by the
-    # batch's per-subject min/max — lexicographic min/max on the ISO obj
-    # halves; curated ('A') stored spans are never overridden
     new_spans = E.emit_span_triples(ext, sparse).select(
         "subj",
         F.split("obj", "/").getItem(0).alias("n_start"),
@@ -302,6 +316,7 @@ def incremental_update(
     start = F.least("n_start", "s_start")  # least/greatest skip NULLs
     end = F.greatest("n_end", "s_end")
     obj = F.concat_ws("/", start, end)
+    ts_start, ts_end = F.to_timestamp(start, E.ISO_FMT), F.to_timestamp(end, E.ISO_FMT)
     span_rows = m.select(
         F.xxhash64(F.col("subj"), F.lit("hasSpan"), obj).alias("triple_id"),
         "subj",
@@ -309,55 +324,37 @@ def incremental_update(
         obj.alias("obj"),
         F.lit("E").alias("qual_kind"),
         F.lit("Y").alias("qual_comparator"),
-        (
-            (
-                F.unix_micros(F.to_timestamp(end, "yyyy-MM-dd'T'HH:mm:ss'Z'"))
-                - F.unix_micros(F.to_timestamp(start, "yyyy-MM-dd'T'HH:mm:ss'Z'"))
-            )
-            / 86400000000.0
-        ).alias("qual_value_num"),
+        ((F.unix_micros(ts_end) - F.unix_micros(ts_start)) / 86400000000.0).alias(
+            "qual_value_num"
+        ),
         F.lit(None).cast("string").alias("qual_lang"),
         F.lit(None).cast("string").alias("raw_surface"),
         F.least(F.col("src_url"), F.col("s_src")).alias("src_url"),
-        F.to_timestamp(end, "yyyy-MM-dd'T'HH:mm:ss'Z'").alias("src_ts"),
+        ts_end.alias("src_ts"),
     )
-    delta = delta.unionByName(span_rows)
-
-    # crash-safe publication: every batch artifact lands in a hidden
-    # temp dir first; the final os.rename is the atomic commit point.
-    # _increment_dirs only matches ^batch-\d{5}$, so a half-written
-    # .batch-NNNNN.tmp from a crashed run is invisible to read_triples
-    # and simply overwritten on retry — no partial batch can ever enter
-    # the merge-on-read view. The signature append still precedes the
-    # rename (a batch must never be visible without its sigs); a crash
-    # between the two can leave duplicate sidecar rows, which the
-    # dropDuplicates on read absorbs.
-    import shutil
-
-    batch = _next_batch(out_dir)
-    inc_dir = os.path.join(out_dir, "increments", batch)
-    tmp_dir = os.path.join(out_dir, "increments", f".{batch}.tmp")
-    shutil.rmtree(tmp_dir, ignore_errors=True)
-    delta.write.mode("overwrite").partitionBy("pred").parquet(
-        os.path.join(tmp_dir, "triples")
+    cp.run_stage(
+        "triples",
+        lambda: E.all_triples(ext, cands, mapping_new)
+        .filter(F.col("pred") != "hasSpan")
+        .distinct()
+        .unionByName(span_rows),
+        partition_by=["pred"],
     )
-    mapping_new.write.parquet(os.path.join(tmp_dir, "mapping"))
-    ext.select("url", "warc_ts", "lang", "text").write.parquet(
-        os.path.join(tmp_dir, "extracted")
-    )
-    new_sigs.write.mode("append").parquet(sig_path)
-    os.rename(tmp_dir, inc_dir)
-    n_delta = spark.read.parquet(os.path.join(inc_dir, "triples")).count()
-    n_dropped = nb_dropped.count() + nn_metrics.count()
+    # counted before the commit: the sidecar append invalidates cached
+    # plans over the sidecar (v_nb), and the rename moves the stage files
+    # these plans read
+    rows = {r.stage: r.rows_out for r in cp.results}
     out = {
         "batch": batch,
-        "n_new_pages": ext.count(),
-        "n_delta_triples": n_delta,
+        "n_new_pages": rows["extracted"],
+        "n_delta_triples": rows["triples"],
         "n_new_base_edges": v_nb.count(),
         "deferred_base_merges": deferred,
-        "n_capped_blocks": n_dropped,
+        "n_capped_blocks": nb_dropped.count() + nn_metrics.count(),
         "compacted": False,
     }
+    new_sigs.write.mode("append").parquet(sig_path)
+    os.rename(tmp_dir, inc_dir)
     # auto-compaction: unbounded increment lists grow the merge-on-read
     # plan linearly (one union branch + dedup input per batch) — the
     # rewrite_data_files discipline, triggered automatically
@@ -404,8 +401,6 @@ def compact(spark: SparkSession, out_dir: str) -> dict:
     further increments; a fresh full run_pipeline belongs in a new
     --out (its stage manifests describe the original pages input, not
     the augmented corpus)."""
-    import shutil
-
     incs = _increment_dirs(out_dir)
     for d in incs:
         mp = os.path.join(out_dir, "increments", d, "mapping")
@@ -427,5 +422,5 @@ def compact(spark: SparkSession, out_dir: str) -> dict:
     os.rename(tmp, os.path.join(out_dir, "triples"))
     shutil.rmtree(old)
     shutil.rmtree(os.path.join(out_dir, "increments"), ignore_errors=True)
-    n = spark.read.parquet(os.path.join(out_dir, "triples")).count()
+    n = _footer_row_count(os.path.join(out_dir, "triples"))
     return {"n_triples": n, "compacted": True, "folded_batches": len(incs)}

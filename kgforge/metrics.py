@@ -11,19 +11,14 @@ uses approx_count_distinct (documented at SURVEY.md §2.4).
 
 from __future__ import annotations
 
+import glob
+import hashlib
+import os
+import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-def stage_counts(df: DataFrame, stage: str, subj_col: str | None = None) -> DataFrame:
-    aggs = [F.lit(stage).alias("stage"), F.count(F.lit(1)).alias("n_rows")]
-    if subj_col:
-        aggs.append(F.countDistinct(subj_col).alias("n_subjects"))
-    else:
-        aggs.append(F.lit(None).cast("long").alias("n_subjects"))
-    return df.agg(*aggs)
 
 
 def triple_report(triples: DataFrame) -> DataFrame:
@@ -49,13 +44,24 @@ def triple_report(triples: DataFrame) -> DataFrame:
 def write_metrics(
     metrics: DataFrame, out_dir: str, run_id: str, name: str = "_metrics"
 ) -> None:
+    """Write `metrics` as run `run_id`'s rows of out_dir/name, replacing
+    any rows an earlier attempt of that run wrote. Each run id owns one
+    parquet file, written under a hidden name and moved over the old one
+    (os.replace), so a reader sees the old rows or the new, never both."""
+    path = os.path.join(out_dir, name)
+    key = hashlib.sha1(run_id.encode("utf-8")).hexdigest()[:16]
+    tmp = os.path.join(path, f".{key}.tmp")
     (
         metrics.withColumn("run_id", F.lit(run_id))
         .withColumn("recorded_at", F.lit(int(time.time())))
         .coalesce(1)
-        .write.mode("append")
-        .parquet(f"{out_dir}/{name}")
+        .write.mode("overwrite")
+        .parquet(tmp)
     )
+    # one task writes one file, empty frames included (it carries the schema)
+    (part,) = glob.glob(os.path.join(tmp, "part-*.parquet"))
+    os.replace(part, os.path.join(path, f"run-{key}.parquet"))
+    shutil.rmtree(tmp)
 
 
 def read_metrics(

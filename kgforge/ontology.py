@@ -284,3 +284,11 @@ def load_dictionary(spark: SparkSession, path: str) -> DataFrame:
     """Load + full cleanup pipeline; result is broadcast at use sites."""
     raw = spark.read.parquet(path)
     return domain_of(dedup_by_preference(propagate_hierarchy(clean_dictionary(raw))))
+
+
+def linker_inputs(raw: DataFrame) -> tuple[DataFrame, list[str]]:
+    """The two things the linking stages take from a raw dictionary: the
+    cleaned, propagated dictionary link_mentions joins against and the
+    alias list detect_mentions matches (one driver fetch)."""
+    dic = propagate_hierarchy(clean_dictionary(raw))
+    return dic, collect_aliases(linker_dictionary(dic))

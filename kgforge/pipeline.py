@@ -20,6 +20,8 @@ Two consumers:
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -75,28 +77,30 @@ def run_pipeline(
         "extracted", lambda: extract_pages(pages, langs), fp_extract
     )
 
-    dic = O.propagate_hierarchy(
-        O.clean_dictionary(spark.read.parquet(dict_path))
+    # the dictionary is prepared only by a stage that computes, at most
+    # once per call: a resume never touches it
+    dictionary = functools.cache(
+        lambda: O.linker_inputs(spark.read.parquet(dict_path))
     )
-    aliases = O.collect_aliases(O.linker_dictionary(dic))
-
     mentions = cp.run_stage(
-        "mentions", lambda: detect_mentions(extracted, aliases), fp_mentions
+        "mentions",
+        lambda: detect_mentions(extracted, dictionary()[1]),
+        fp_mentions,
     )
     candidates = cp.run_stage(
-        "candidates", lambda: link_mentions(mentions, dic), fp_mentions
+        "candidates", lambda: link_mentions(mentions, dictionary()[0]), fp_mentions
     )
-    # canon_info receives the CC branch decision (local vs distributed
-    # union-find, probed edge count, memory-derived threshold) — run
-    # evidence for the cutover policy. Populated only when the stage
-    # actually computes: on resume the decision belongs to the run that
-    # produced the checkpoint, so nothing is (re-)recorded.
-    canon_info: dict = {}
-    mapping = cp.run_stage(
-        "canon_mapping",
-        lambda: C.canonicalize(extracted, threshold=threshold, info=canon_info)[0],
-        fp_canon,
-    )
+
+    def canon() -> DataFrame:
+        # the canon metrics (capped LSH blocks, CC branch) belong to the
+        # run that computes the mapping; on resume nothing is re-recorded.
+        # The frame filters the checkpointed block table, so writing it
+        # costs no job over the blocks.
+        mapping, metrics = C.canonicalize(extracted, threshold=threshold)
+        write_metrics(metrics, out_dir, run_id, name="_metrics_canon")
+        return mapping
+
+    mapping = cp.run_stage("canon_mapping", canon, fp_canon)
     triples = cp.run_stage(
         "triples",
         # distinct() already hash-shuffles the full row set; write the
@@ -115,35 +119,13 @@ def run_pipeline(
         fp_triples,
         partition_by=["pred"],
     )
-    report = triple_report(triples)
-    write_metrics(report, out_dir, run_id)
-    if canon_info:
-        # three literal scalars, already computed by the eager CC probe —
-        # persisting them costs one tiny parquet append, never a job over
-        # the block table (which the full canonicalize metrics frame
-        # would re-aggregate)
-        cc_rows = spark.createDataFrame(
-            [
-                ("cc_branch", canon_info["branch"],
-                 int(canon_info["n_edges_probed"] or 0)),
-                ("cc_threshold", canon_info["branch"],
-                 int(canon_info["threshold"])),
-            ],
-            "metric string, key string, value long",
-        )
-        write_metrics(cc_rows, out_dir, run_id, name="_metrics_canon")
-    # rows_out was counted once by the checkpoint manager when the stage
-    # materialized — do not re-scan the triple table just to repeat it
-    n_triples = next(
-        (r.rows_out for r in cp.results if r.stage == "triples" and r.rows_out >= 0),
-        None,
-    )
-    if n_triples is None:
-        n_triples = triples.count()
+    emitted = cp.results[-1]
+    if not emitted.skipped:
+        write_metrics(triple_report(triples), out_dir, run_id)
     return {
         "out_dir": out_dir,
         "stages": [r.__dict__ for r in cp.results],
-        "n_triples": n_triples,
+        "n_triples": emitted.rows_out,
     }
 
 

@@ -268,8 +268,8 @@ def run_stream_kg_parity(
     from kgforge.mentions import detect_mentions
     from kgforge.sources import PAGES_SCHEMA
 
-    dic = O.propagate_hierarchy(O.clean_dictionary(dict_df))
-    aliases = sorted(O.collect_aliases(O.linker_dictionary(dic)))
+    dic, aliases = O.linker_inputs(dict_df)
+    aliases = sorted(aliases)
 
     def stages(pages: DataFrame) -> DataFrame:
         cand = link_mentions(
@@ -590,23 +590,14 @@ def stream_incremental_ingest(
     Returns the number of increments ingested by this call."""
     import os
 
-    from kgforge.incremental import _increment_dirs, incremental_update
+    from kgforge.incremental import incremental_update, read_committed
 
     n_ingested = 0
 
-    def known_urls() -> DataFrame:
-        known = spark.read.parquet(os.path.join(out_dir, "canon_mapping")).select(
-            "url"
-        )
-        for d in _increment_dirs(out_dir):
-            mp = os.path.join(out_dir, "increments", d, "mapping")
-            if os.path.isdir(mp):
-                known = known.union(spark.read.parquet(mp).select("url"))
-        return known
-
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
         nonlocal n_ingested
-        fresh = batch_df.join(known_urls(), "url", "left_anti")
+        known = read_committed(spark, out_dir, "canon_mapping", "mapping", ["url"])
+        fresh = batch_df.join(known, "url", "left_anti")
         p = os.path.join(work_dir, f"stream_batch_{batch_id}")
         fresh.write.mode("overwrite").parquet(p)
         if spark.read.parquet(p).limit(1).count() == 0:

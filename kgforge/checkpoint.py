@@ -1,4 +1,5 @@
-"""Checkpoint / lineage manifest — stage-level resume (SURVEY.md §7.6).
+"""Checkpoint / lineage manifest — stage-level resume (SURVEY.md §7.6),
+and the one publish step every directory kgforge replaces goes through.
 
 The reference is truncate-and-reload (pcornetclear,
 Oracle/PCORNetLoader_ora.sql:2576-2593) with COMMIT per emitter; the
@@ -12,9 +13,15 @@ Manifest layout (out_dir/_checkpoints/<stage>.json):
 A stage runs only when its manifest entry is missing or its input
 fingerprint changed. A skipped stage reports the rows_out its manifest
 recorded, so a resume reads every count without touching the data.
-Stage outputs are parquet directories written atomically by Spark
-(job-level commit protocol), so a killed run leaves either a complete
-stage or no manifest entry — the kill-and-rerun test covers both sides.
+
+Publishing: `publishing(path)` hands out a hidden sibling to write and
+swaps it in with two renames when the block ends; `settle(path)`
+finishes a swap a crash cut between those renames. Stage outputs,
+crawl batches, the compacted base, migrated tables and the signature
+sidecar all go through it, so each is complete or absent at every
+instant. A stage drops its manifest before it builds and writes it
+after the swap: a crash anywhere in between leaves no manifest (or a
+torn one that fails to decode), and the re-run recomputes the stage.
 
 On a real cluster with Iceberg jars, `input_fingerprint` is the source
 snapshot id and stage outputs are Iceberg overwritePartitions; the logic
@@ -23,11 +30,15 @@ here is identical with directory-level granularity.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import shutil
 import time
+from contextlib import contextmanager, suppress
 from dataclasses import dataclass
 
+from pyspark.errors import PySparkRuntimeError
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -51,19 +62,12 @@ class CheckpointManager:
     def _manifest_path(self, stage: str) -> str:
         return os.path.join(self.manifest_dir, f"{stage}.json")
 
-    def _data_path(self, stage: str) -> str:
-        return os.path.join(self.out_dir, stage)
-
     def _finished(self, stage: str, input_fingerprint: str = "") -> dict | None:
         """The stage's manifest when it finished for this input, else None."""
-        try:
-            with open(self._manifest_path(stage)) as f:
-                m = json.load(f)
-        except (OSError, json.JSONDecodeError):
-            return None
+        m = _load(self._manifest_path(stage)) or {}
         # the data must actually exist (a deleted output invalidates)
         done = m.get("input_fingerprint") == input_fingerprint and os.path.exists(
-            os.path.join(self._data_path(stage), "_SUCCESS")
+            os.path.join(self.out_dir, stage, "_SUCCESS")
         )
         return m if done else None
 
@@ -78,18 +82,19 @@ class CheckpointManager:
         says this stage already finished for the same input — then just
         reload the persisted output (no recompute; the resume test
         asserts this via the manifest timestamps)."""
-        path = self._data_path(stage)
+        path = os.path.join(self.out_dir, stage)
         done = self._finished(stage, input_fingerprint)
         if done is not None:
             self.results.append(StageResult(stage, done["rows_out"], 0.0, skipped=True))
             return self.spark.read.parquet(path)
+        # a manifest must never outlive the data it describes: a crash
+        # between the swap below and the new manifest then recomputes
+        if os.path.exists(self._manifest_path(stage)):
+            os.remove(self._manifest_path(stage))
         t0 = time.time()
         df = build()
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(path)
-        out = self.spark.read.parquet(path)
+        with publishing(path) as tmp:
+            df.write.parquet(tmp, partitionBy=partition_by)
         # row count from parquet footers — metadata-only, no second full
         # scan of the stage output (the Iceberg deployment reads this
         # from snapshot manifests; same discipline here)
@@ -108,15 +113,20 @@ class CheckpointManager:
                 f,
             )
         self.results.append(StageResult(stage, rows, wall, skipped=False))
-        return out
+        return self.spark.read.parquet(path)
 
     def manifest(self) -> list[dict]:
-        out = []
-        for fn in sorted(os.listdir(self.manifest_dir)):
-            if fn.endswith(".json"):
-                with open(os.path.join(self.manifest_dir, fn)) as f:
-                    out.append(json.load(f))
-        return out
+        """Every decodable stage manifest (a torn one is no manifest)."""
+        paths = sorted(glob.glob(os.path.join(self.manifest_dir, "*.json")))
+        return [m for m in map(_load, paths) if m is not None]
+
+
+def _load(path: str) -> dict | None:
+    try:
+        with open(path) as f:
+            return json.load(f)
+    except (OSError, json.JSONDecodeError):
+        return None
 
 
 def _footer_row_count(path: str) -> int:
@@ -128,27 +138,63 @@ def _footer_row_count(path: str) -> int:
 
     import pyarrow.parquet as pq
 
-    paths = [
-        os.path.join(root, fn)
-        for root, _dirs, files in os.walk(path)
-        for fn in files
-        if fn.endswith(".parquet")
-    ]
-    if not paths:
-        return 0
-    with ThreadPoolExecutor(max_workers=min(16, len(paths))) as ex:
+    paths = _parquet_files(path)
+    with ThreadPoolExecutor(max_workers=16) as ex:
         return sum(
             ex.map(lambda p: pq.ParquetFile(p).metadata.num_rows, paths)
         )
 
 
+def _parquet_files(path: str) -> list[str]:
+    return sorted(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
+
+
+def _siblings(path: str) -> tuple[str, str]:
+    """The hidden (new, old) siblings `publishing` swaps through."""
+    parent, name = os.path.split(path.rstrip("/"))
+    return os.path.join(parent, f".{name}.tmp"), os.path.join(parent, f".{name}.old")
+
+
+def settle(path: str) -> None:
+    """Finish a `publishing` swap that a crash cut short. The old copy
+    is only renamed aside once the new one is complete, so an aside copy
+    with no `path` means the new copy (if any) is ready to move in."""
+    new, old = _siblings(path)
+    if os.path.exists(old):
+        if not os.path.exists(path) and os.path.exists(new):
+            os.rename(new, path)
+        shutil.rmtree(old)
+
+
+@contextmanager
+def publishing(path: str):
+    """Yield a hidden sibling of `path` to write; when the block ends,
+    swap it in (old copy aside, new copy in, old copy removed). If the
+    block raises, `path` is left as it was. A block that writes nothing
+    withdraws `path`."""
+    settle(path)
+    new, old = _siblings(path)
+    shutil.rmtree(new, ignore_errors=True)
+    try:
+        yield new
+    except BaseException:
+        shutil.rmtree(new, ignore_errors=True)
+        raise
+    if os.path.exists(path):
+        os.rename(path, old)
+    if os.path.exists(new):
+        os.rename(new, path)
+    shutil.rmtree(old, ignore_errors=True)
+    # Spark keys cached plans by path: drop what the session holds for
+    # the old copy (no session, nothing cached)
+    with suppress(PySparkRuntimeError):
+        SparkSession.active().catalog.refreshByPath(path)
+
+
 def fingerprint_input(path: str) -> str:
-    """Cheap input fingerprint: parquet file names + sizes + mtimes.
+    """Cheap input fingerprint: names + sizes + mtimes of a parquet file,
+    or of every parquet file under a directory.
     (Iceberg snapshot id on a real deployment.)"""
-    parts = []
-    for root, _dirs, files in os.walk(path):
-        for fn in sorted(files):
-            if fn.endswith(".parquet"):
-                st = os.stat(os.path.join(root, fn))
-                parts.append(f"{fn}:{st.st_size}:{int(st.st_mtime)}")
-    return "|".join(parts)
+    files = [path] if os.path.isfile(path) else _parquet_files(path)
+    stats = ((os.path.basename(f), os.stat(f)) for f in files)
+    return "|".join(f"{fn}:{st.st_size}:{st.st_mtime_ns}" for fn, st in stats)

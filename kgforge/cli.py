@@ -5,7 +5,10 @@ Locally:    python -m kgforge.cli run --pages ... --dict ... --out ...
             python -m kgforge.cli synth --out /tmp/fixture --pages 1000
 
 Re-submitting the same `run` resumes from the checkpoint manifest
-(SURVEY.md §7.6) — finished stages are skipped, outputs identical.
+(SURVEY.md §7.6) — finished stages are skipped, outputs identical; a run
+killed at any point leaves every output complete or absent, so the
+re-submission also reaches the uninterrupted result. `--publish`
+overwrites its target the same way: a failed write keeps the old table.
 """
 
 from __future__ import annotations

@@ -60,6 +60,14 @@ def spark_cpus() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
+def driver_memory() -> str:
+    """Driver heap: KGF_DRIVER_MEM when set, else the smaller of 16g
+    (the measured optimum, see get_spark) and half the host's physical
+    memory — a plain run never claims the whole host."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2 // 2**20
+    return os.environ.get("KGF_DRIVER_MEM") or f"{min(16 * 1024, half_mb)}m"
+
+
 def _local_dirs() -> str | None:
     """Shuffle/spill directories. On this bench box /tmp is a virtual
     ext4 disk while /dev/shm is a 128G tmpfs; 32 concurrent shuffle
@@ -92,11 +100,11 @@ def get_spark(
     ~GB-sized aggregation state that G1 re-scans instead of spilling
     early to page-cache-backed disk. 16g is the measured optimum and is
     FIXED across parallelism levels — mirroring a real cluster, where
-    per-executor memory does not change with executor count.
+    per-executor memory does not change with executor count — capped at
+    half the host's memory (driver_memory).
     """
     n = cpus or spark_cpus()
     sp = shuffle_partitions or n
-    default_mem = "16g"
     b = (
         SparkSession.builder.appName(app)
         .master(f"local[{n}]")
@@ -107,7 +115,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("KGF_DRIVER_MEM", default_mem))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         # fine scan splits: local bench corpora are a few hundred MB, and
         # UDF stages need more splits than 128MB chunks would give; on a

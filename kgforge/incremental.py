@@ -37,13 +37,17 @@ Iceberg deployment would use:
   read_triples() presents base + increments with span supersedence
   (merge-on-read); compact() materializes that view as the new base
   (compaction) and clears increments.
+- Every directory this module creates or replaces (batch dirs, the
+  signature sidecar, the compacted base, the cleared increments) is
+  published through checkpoint.publishing, so a crash leaves each one
+  complete or absent; the readers settle a swap a crash cut short.
 """
 
 from __future__ import annotations
 
+import glob
 import os
 import re
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -52,7 +56,7 @@ from pyspark.sql.window import Window
 from kgforge import canon as C
 from kgforge import emit as E
 from kgforge import ontology as O
-from kgforge.checkpoint import CheckpointManager, _footer_row_count
+from kgforge.checkpoint import CheckpointManager, _footer_row_count, publishing, settle
 from kgforge.conf import NEAR_DUP_THRESHOLD
 from kgforge.extract import extract_pages
 from kgforge.link import link_mentions
@@ -96,7 +100,8 @@ def _ensure_signature_sidecar(spark: SparkSession, out_dir: str) -> str:
     sig_path = os.path.join(out_dir, "signatures")
     if not os.path.isdir(sig_path):
         base_ext = spark.read.parquet(os.path.join(out_dir, "extracted"))
-        C.minhash_signatures(base_ext, "text", "url").write.parquet(sig_path)
+        with publishing(sig_path) as tmp:
+            C.minhash_signatures(base_ext, "text", "url").write.parquet(tmp)
     return sig_path
 
 
@@ -175,186 +180,181 @@ def incremental_update(
     threshold: float = NEAR_DUP_THRESHOLD,
     auto_compact_after: int | None = 8,
 ) -> dict:
-    # canonical mapping = base stage PLUS every prior increment's mapping,
-    # so a batch can anchor to pages introduced by earlier batches (their
-    # signatures are already in the sidecar); extracted text likewise, so
-    # exact verification can read a prior batch's page text
-    base_mapping = read_committed(
-        spark, out_dir, "canon_mapping", "mapping", ["url", "canon_url"]
-    )
-    base_ext = read_committed(spark, out_dir, "extracted", "extracted", ["url", "text"])
-    sig_path = _ensure_signature_sidecar(spark, out_dir)
-    # dropDuplicates: a crash between the sidecar append and the batch
-    # rename re-appends the same (url, sig) rows on retry; signatures
-    # are deterministic per url so keeping any one copy is exact.
-    # The left-semi against the committed mappings (base + every visible
-    # increment — both carry identity rows for ALL their urls) drops
-    # ORPHANED sidecar rows from a crash in the append-then-rename
-    # window: without it, the crashed batch's own urls sit on the BASE
-    # side of the block join on retry and the resulting self/new-new
-    # pairs inflate n_new_base_edges / n_capped_blocks (the mapping was
-    # always safe — orphans miss base_mapping — but metrics lied).
-    base_sigs = (
-        spark.read.parquet(sig_path)
-        .dropDuplicates(["url"])
-        .join(base_mapping.select("url"), "url", "left_semi")
-    )
-
     # crash-safe publication: every batch artifact is a checkpointed
-    # stage of a hidden temp dir; the final os.rename is the atomic
-    # commit point. _increment_dirs only matches ^batch-\d{5}$, so a
-    # half-written .batch-NNNNN.tmp from a crashed run is invisible to
-    # read_triples and removed on retry — no partial batch can ever
-    # enter the merge-on-read view. The signature append still precedes
-    # the rename (a batch must never be visible without its sigs); a
-    # crash between the two can leave duplicate sidecar rows, which the
-    # dropDuplicates on read absorbs.
+    # stage of the hidden dir `publishing` hands out, and the swap at the
+    # end of the block is the commit point. _increment_dirs only matches
+    # ^batch-\d{5}$, so a half-written batch from a crashed run is
+    # invisible to read_triples and wiped by the retry — no partial batch
+    # can ever enter the merge-on-read view. The signature append is the
+    # last step before the swap (a batch must never be visible without
+    # its sigs); a crash between the two leaves orphaned sidecar rows,
+    # which the guard on base_sigs below absorbs.
     batch = _next_batch(out_dir)
-    inc_dir = os.path.join(out_dir, "increments", batch)
-    tmp_dir = os.path.join(out_dir, "increments", f".{batch}.tmp")
-    shutil.rmtree(tmp_dir, ignore_errors=True)
-    cp = CheckpointManager(spark, tmp_dir, batch)
-
-    dic, aliases = O.linker_inputs(spark.read.parquet(dict_path))
-    ext = cp.run_stage(
-        "extracted",
-        lambda: extract_pages(spark.read.parquet(new_pages_path), langs),
-    )
-    cands = link_mentions(detect_mentions(ext, aliases), dic).cache()
-
-    # --- canonicalization delta -----------------------------------------
-    new_sigs = C.minhash_signatures(ext, "text", "url").localCheckpoint(eager=True)
-    new_blocks = C.lsh_blocks(new_sigs, id_col="url")
-    # Constant-size prefilter for the base side of the block join: a
-    # Bloom bitmap over the BATCH's band keys (the small side) drops
-    # base blocks whose key definitely has no partner, before the
-    # base-side groupBy shuffle — at corpus scale the base block table
-    # dwarfs the batch's, and most of its keys have no match. Exactly
-    # output-preserving: _capped_block_join is inner on bk on both the
-    # sizes and pairs paths, the per-bk prune keeps surviving blocks
-    # whole (the probe key IS bk), and false positives merely ride
-    # through to the join that was already going to discard them
-    # (pytest asserts run parity with the prune disabled).
-    nb_bloom = B.bloom_build(new_blocks.select("bk"), B.h64_xx(F.col("bk")))
-    base_blocks = B.bloom_prune(
-        C.lsh_blocks(base_sigs, id_col="url"), B.h64_xx(F.col("bk")), nb_bloom
-    )
-    nb_pairs, nb_dropped = _capped_block_join(
-        new_blocks, base_blocks, C.MAX_LSH_BLOCK
-    )
-    nn_pairs, nn_metrics = C.candidate_pairs(new_blocks, id_col="url")
-
-    # exact verification: batch text + ONLY the base urls that appear in
-    # a candidate pair (left-semi pruned scan of the stored stage)
-    base_cand_urls = nb_pairs.select(F.col("b").alias("url")).distinct()
-    texts = ext.select("url", "text").unionByName(
-        base_ext.join(base_cand_urls, "url", "left_semi")
-    )
-    v_nb = C.verify_pairs_jaccard(nb_pairs, texts, threshold).cache()
-    v_nn = C.verify_pairs_jaccard(nn_pairs, texts, threshold)
-
-    # distinct (new url, base canonical) anchoring pairs; per-url min
-    # anchor drives the mapping below
-    url_anchor = (
-        v_nb.join(
-            base_mapping.select(F.col("url").alias("b"), "canon_url"), "b"
+    with publishing(os.path.join(out_dir, "increments", batch)) as tmp_dir:
+        cp = CheckpointManager(spark, tmp_dir, batch)
+        # canonical mapping = base stage PLUS every prior increment's mapping,
+        # so a batch can anchor to pages introduced by earlier batches (their
+        # signatures are already in the sidecar); extracted text likewise, so
+        # exact verification can read a prior batch's page text
+        base_mapping = read_committed(
+            spark, out_dir, "canon_mapping", "mapping", ["url", "canon_url"]
         )
-        .select(F.col("a").alias("url"), "canon_url")
-        .distinct()
-        .localCheckpoint(eager=True)  # consumed by mapping AND deferral count
-    )
-    anchors = url_anchor.groupBy("url").agg(F.min("canon_url").alias("anchor"))
-
-    # components among the batch, then adopt the min anchor per component
-    comps = C.connected_components(
-        v_nn.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-    )
-    node_comp = (
-        ext.select("url")
-        .join(
-            F.broadcast(comps.withColumnRenamed("node", "url")), "url", "left"
+        base_ext = read_committed(spark, out_dir, "extracted", "extracted", ["url", "text"])
+        sig_path = _ensure_signature_sidecar(spark, out_dir)
+        # dropDuplicates: a crash between the sidecar append and the batch
+        # rename re-appends the same (url, sig) rows on retry; signatures
+        # are deterministic per url so keeping any one copy is exact.
+        # The left-semi against the committed mappings (base + every visible
+        # increment — both carry identity rows for ALL their urls) drops
+        # ORPHANED sidecar rows from a crash in the append-then-rename
+        # window: without it, the crashed batch's own urls sit on the BASE
+        # side of the block join on retry and the resulting self/new-new
+        # pairs inflate n_new_base_edges / n_capped_blocks (the mapping was
+        # always safe — orphans miss base_mapping — but metrics lied).
+        base_sigs = (
+            spark.read.parquet(sig_path)
+            .dropDuplicates(["url"])
+            .join(base_mapping.select("url"), "url", "left_semi")
         )
-        .select("url", F.coalesce("comp", F.col("url")).alias("comp"))
-    )
-    comp_anchor = (
-        node_comp.join(anchors, "url", "left")
-        .groupBy("comp")
-        .agg(F.min("anchor").alias("comp_anchor"), F.min("url").alias("comp_min"))
-    )
-    deferred = deferred_merge_count(node_comp, url_anchor)
-    mapping_new = cp.run_stage(
-        "mapping",
-        lambda: node_comp.join(F.broadcast(comp_anchor), "comp").select(
-            "url",
-            F.coalesce("comp_anchor", "comp_min").alias("canon_url"),
-        ),
-    )
 
-    # --- emission --------------------------------------------------------
-    # the full run's emitters, with their observed spans replaced by the
-    # stored span of each subject (if any) widened by the batch's
-    # per-subject min/max — lexicographic min/max on the ISO obj halves;
-    # curated ('A') stored spans are never overridden
-    sparse = mapping_new.filter(F.col("url") != F.col("canon_url"))
-    new_spans = E.emit_span_triples(ext, sparse).select(
-        "subj",
-        F.split("obj", "/").getItem(0).alias("n_start"),
-        F.split("obj", "/").getItem(1).alias("n_end"),
-        "src_url",
-    )
-    stored = read_triples(spark, out_dir).filter(F.col("pred") == "hasSpan")
-    stored_spans = stored.select(
-        "subj",
-        F.split("obj", "/").getItem(0).alias("s_start"),
-        F.split("obj", "/").getItem(1).alias("s_end"),
-        F.col("qual_kind").alias("s_basis"),
-        F.col("src_url").alias("s_src"),
-    )
-    m = new_spans.join(stored_spans, "subj", "left").filter(
-        (F.col("s_basis").isNull()) | (F.col("s_basis") == "E")
-    )
-    start = F.least("n_start", "s_start")  # least/greatest skip NULLs
-    end = F.greatest("n_end", "s_end")
-    obj = F.concat_ws("/", start, end)
-    ts_start, ts_end = F.to_timestamp(start, E.ISO_FMT), F.to_timestamp(end, E.ISO_FMT)
-    span_rows = m.select(
-        F.xxhash64(F.col("subj"), F.lit("hasSpan"), obj).alias("triple_id"),
-        "subj",
-        F.lit("hasSpan").alias("pred"),
-        obj.alias("obj"),
-        F.lit("E").alias("qual_kind"),
-        F.lit("Y").alias("qual_comparator"),
-        ((F.unix_micros(ts_end) - F.unix_micros(ts_start)) / 86400000000.0).alias(
-            "qual_value_num"
-        ),
-        F.lit(None).cast("string").alias("qual_lang"),
-        F.lit(None).cast("string").alias("raw_surface"),
-        F.least(F.col("src_url"), F.col("s_src")).alias("src_url"),
-        ts_end.alias("src_ts"),
-    )
-    cp.run_stage(
-        "triples",
-        lambda: E.all_triples(ext, cands, mapping_new)
-        .filter(F.col("pred") != "hasSpan")
-        .distinct()
-        .unionByName(span_rows),
-        partition_by=["pred"],
-    )
-    # counted before the commit: the sidecar append invalidates cached
-    # plans over the sidecar (v_nb), and the rename moves the stage files
-    # these plans read
-    rows = {r.stage: r.rows_out for r in cp.results}
-    out = {
-        "batch": batch,
-        "n_new_pages": rows["extracted"],
-        "n_delta_triples": rows["triples"],
-        "n_new_base_edges": v_nb.count(),
-        "deferred_base_merges": deferred,
-        "n_capped_blocks": nb_dropped.count() + nn_metrics.count(),
-        "compacted": False,
-    }
-    new_sigs.write.mode("append").parquet(sig_path)
-    os.rename(tmp_dir, inc_dir)
+        dic, aliases = O.linker_inputs(spark.read.parquet(dict_path))
+        ext = cp.run_stage(
+            "extracted",
+            lambda: extract_pages(spark.read.parquet(new_pages_path), langs),
+        )
+        cands = link_mentions(detect_mentions(ext, aliases), dic).cache()
+
+        # --- canonicalization delta -----------------------------------------
+        new_sigs = C.minhash_signatures(ext, "text", "url").localCheckpoint(eager=True)
+        new_blocks = C.lsh_blocks(new_sigs, id_col="url")
+        # Constant-size prefilter for the base side of the block join: a
+        # Bloom bitmap over the BATCH's band keys (the small side) drops
+        # base blocks whose key definitely has no partner, before the
+        # base-side groupBy shuffle — at corpus scale the base block table
+        # dwarfs the batch's, and most of its keys have no match. Exactly
+        # output-preserving: _capped_block_join is inner on bk on both the
+        # sizes and pairs paths, the per-bk prune keeps surviving blocks
+        # whole (the probe key IS bk), and false positives merely ride
+        # through to the join that was already going to discard them
+        # (pytest asserts run parity with the prune disabled).
+        nb_bloom = B.bloom_build(new_blocks.select("bk"), B.h64_xx(F.col("bk")))
+        base_blocks = B.bloom_prune(
+            C.lsh_blocks(base_sigs, id_col="url"), B.h64_xx(F.col("bk")), nb_bloom
+        )
+        nb_pairs, nb_dropped = _capped_block_join(
+            new_blocks, base_blocks, C.MAX_LSH_BLOCK
+        )
+        nn_pairs, nn_metrics = C.candidate_pairs(new_blocks, id_col="url")
+
+        # exact verification: batch text + ONLY the base urls that appear in
+        # a candidate pair (left-semi pruned scan of the stored stage)
+        base_cand_urls = nb_pairs.select(F.col("b").alias("url")).distinct()
+        texts = ext.select("url", "text").unionByName(
+            base_ext.join(base_cand_urls, "url", "left_semi")
+        )
+        v_nb = C.verify_pairs_jaccard(nb_pairs, texts, threshold).cache()
+        v_nn = C.verify_pairs_jaccard(nn_pairs, texts, threshold)
+
+        # distinct (new url, base canonical) anchoring pairs; per-url min
+        # anchor drives the mapping below
+        url_anchor = (
+            v_nb.join(
+                base_mapping.select(F.col("url").alias("b"), "canon_url"), "b"
+            )
+            .select(F.col("a").alias("url"), "canon_url")
+            .distinct()
+            .localCheckpoint(eager=True)  # consumed by mapping AND deferral count
+        )
+        anchors = url_anchor.groupBy("url").agg(F.min("canon_url").alias("anchor"))
+
+        # components among the batch, then adopt the min anchor per component
+        comps = C.connected_components(
+            v_nn.select(F.col("a").alias("src"), F.col("b").alias("dst"))
+        )
+        node_comp = (
+            ext.select("url")
+            .join(
+                F.broadcast(comps.withColumnRenamed("node", "url")), "url", "left"
+            )
+            .select("url", F.coalesce("comp", F.col("url")).alias("comp"))
+        )
+        comp_anchor = (
+            node_comp.join(anchors, "url", "left")
+            .groupBy("comp")
+            .agg(F.min("anchor").alias("comp_anchor"), F.min("url").alias("comp_min"))
+        )
+        deferred = deferred_merge_count(node_comp, url_anchor)
+        mapping_new = cp.run_stage(
+            "mapping",
+            lambda: node_comp.join(F.broadcast(comp_anchor), "comp").select(
+                "url",
+                F.coalesce("comp_anchor", "comp_min").alias("canon_url"),
+            ),
+        )
+
+        # --- emission --------------------------------------------------------
+        # the full run's emitters, with their observed spans replaced by the
+        # stored span of each subject (if any) widened by the batch's
+        # per-subject min/max — lexicographic min/max on the ISO obj halves;
+        # curated ('A') stored spans are never overridden
+        sparse = mapping_new.filter(F.col("url") != F.col("canon_url"))
+        new_spans = E.emit_span_triples(ext, sparse).select(
+            "subj",
+            F.split("obj", "/").getItem(0).alias("n_start"),
+            F.split("obj", "/").getItem(1).alias("n_end"),
+            "src_url",
+        )
+        stored = read_triples(spark, out_dir).filter(F.col("pred") == "hasSpan")
+        stored_spans = stored.select(
+            "subj",
+            F.split("obj", "/").getItem(0).alias("s_start"),
+            F.split("obj", "/").getItem(1).alias("s_end"),
+            F.col("qual_kind").alias("s_basis"),
+            F.col("src_url").alias("s_src"),
+        )
+        m = new_spans.join(stored_spans, "subj", "left").filter(
+            (F.col("s_basis").isNull()) | (F.col("s_basis") == "E")
+        )
+        start = F.least("n_start", "s_start")  # least/greatest skip NULLs
+        end = F.greatest("n_end", "s_end")
+        obj = F.concat_ws("/", start, end)
+        ts_start, ts_end = F.to_timestamp(start, E.ISO_FMT), F.to_timestamp(end, E.ISO_FMT)
+        span_rows = m.select(
+            F.xxhash64(F.col("subj"), F.lit("hasSpan"), obj).alias("triple_id"),
+            "subj",
+            F.lit("hasSpan").alias("pred"),
+            obj.alias("obj"),
+            F.lit("E").alias("qual_kind"),
+            F.lit("Y").alias("qual_comparator"),
+            ((F.unix_micros(ts_end) - F.unix_micros(ts_start)) / 86400000000.0).alias(
+                "qual_value_num"
+            ),
+            F.lit(None).cast("string").alias("qual_lang"),
+            F.lit(None).cast("string").alias("raw_surface"),
+            F.least(F.col("src_url"), F.col("s_src")).alias("src_url"),
+            ts_end.alias("src_ts"),
+        )
+        cp.run_stage(
+            "triples",
+            lambda: E.all_triples(ext, cands, mapping_new)
+            .filter(F.col("pred") != "hasSpan")
+            .distinct()
+            .unionByName(span_rows),
+            partition_by=["pred"],
+        )
+        # counted before the sidecar append, which invalidates cached plans
+        # over the sidecar (v_nb)
+        rows = {r.stage: r.rows_out for r in cp.results}
+        out = {
+            "batch": batch,
+            "n_new_pages": rows["extracted"],
+            "n_delta_triples": rows["triples"],
+            "n_new_base_edges": v_nb.count(),
+            "deferred_base_merges": deferred,
+            "n_capped_blocks": nb_dropped.count() + nn_metrics.count(),
+            "compacted": False,
+        }
+        new_sigs.write.mode("append").parquet(sig_path)
     # auto-compaction: unbounded increment lists grow the merge-on-read
     # plan linearly (one union branch + dedup input per batch) — the
     # rewrite_data_files discipline, triggered automatically
@@ -369,6 +369,7 @@ def read_triples(spark: SparkSession, out_dir: str) -> DataFrame:
     rows superseded by the LATEST batch that touched each subject
     (increments emit the fully-merged span, so latest-wins is exact).
     All other rows are set-union (triples are identity-keyed facts)."""
+    settle(os.path.join(out_dir, "triples"))  # a compaction cut mid-swap
     t = spark.read.parquet(os.path.join(out_dir, "triples")).withColumn(
         "_batch", F.lit(0)
     )
@@ -394,33 +395,32 @@ def compact(spark: SparkSession, out_dir: str) -> dict:
     """Materialize the merge-on-read view as the new base triple table
     and clear increments — the Iceberg rewrite/compaction analog.
 
-    The increments' mapping and extracted outputs fold into the base
+    The increments' mapping and extracted files fold into the base
     `canon_mapping` / `extracted` stage dirs first, so FUTURE batches
     can still anchor to (and exact-verify against) pages that arrived
     incrementally. After compaction the out_dir serves read_triples and
     further increments; a fresh full run_pipeline belongs in a new
     --out (its stage manifests describe the original pages input, not
-    the augmented corpus)."""
+    the augmented corpus).
+
+    A retry after a crash at any point reaches the same base: the fold
+    moves one parquet file per rename (each file sits in exactly one
+    dir at every instant, so read_committed stays exact and a retry
+    moves only what is left); the view over a published base plus the
+    same increments is that base again; increments go last."""
     incs = _increment_dirs(out_dir)
-    for d in incs:
-        mp = os.path.join(out_dir, "increments", d, "mapping")
-        if os.path.isdir(mp):
-            spark.read.parquet(mp).write.mode("append").parquet(
-                os.path.join(out_dir, "canon_mapping")
-            )
-        ep = os.path.join(out_dir, "increments", d, "extracted")
-        if os.path.isdir(ep):
-            spark.read.parquet(ep).write.mode("append").parquet(
-                os.path.join(out_dir, "extracted")
-            )
+    for inc, base in (("mapping", "canon_mapping"), ("extracted", "extracted")):
+        for d in incs:
+            files = glob.glob(os.path.join(out_dir, "increments", d, inc, "*.parquet"))
+            for f in sorted(files):
+                os.rename(f, os.path.join(out_dir, base, f"{d}-{os.path.basename(f)}"))
+        # files moved behind Spark's back (see checkpoint.publishing)
+        spark.catalog.refreshByPath(os.path.join(out_dir, base))
 
     merged = read_triples(spark, out_dir)
-    tmp = os.path.join(out_dir, "triples._compacting")
-    merged.write.mode("overwrite").partitionBy("pred").parquet(tmp)
-    old = os.path.join(out_dir, "triples._old")
-    os.rename(os.path.join(out_dir, "triples"), old)
-    os.rename(tmp, os.path.join(out_dir, "triples"))
-    shutil.rmtree(old)
-    shutil.rmtree(os.path.join(out_dir, "increments"), ignore_errors=True)
+    with publishing(os.path.join(out_dir, "triples")) as tmp:
+        merged.write.parquet(tmp, partitionBy="pred")
+    with publishing(os.path.join(out_dir, "increments")):
+        pass  # nothing written: the folded increments are withdrawn
     n = _footer_row_count(os.path.join(out_dir, "triples"))
     return {"n_triples": n, "compacted": True, "folded_batches": len(incs)}

@@ -17,7 +17,7 @@ import os
 import shutil
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -41,6 +41,12 @@ def triple_report(triples: DataFrame) -> DataFrame:
     )
 
 
+def metrics_file(out_dir: str, run_id: str, name: str = "_metrics") -> str:
+    """The one parquet file holding run `run_id`'s rows of out_dir/name."""
+    key = hashlib.sha1(run_id.encode("utf-8")).hexdigest()[:16]
+    return os.path.join(out_dir, name, f"run-{key}.parquet")
+
+
 def write_metrics(
     metrics: DataFrame, out_dir: str, run_id: str, name: str = "_metrics"
 ) -> None:
@@ -48,9 +54,8 @@ def write_metrics(
     any rows an earlier attempt of that run wrote. Each run id owns one
     parquet file, written under a hidden name and moved over the old one
     (os.replace), so a reader sees the old rows or the new, never both."""
-    path = os.path.join(out_dir, name)
-    key = hashlib.sha1(run_id.encode("utf-8")).hexdigest()[:16]
-    tmp = os.path.join(path, f".{key}.tmp")
+    dst = metrics_file(out_dir, run_id, name)
+    tmp = os.path.join(os.path.dirname(dst), f".{os.path.basename(dst)}.tmp")
     (
         metrics.withColumn("run_id", F.lit(run_id))
         .withColumn("recorded_at", F.lit(int(time.time())))
@@ -60,11 +65,5 @@ def write_metrics(
     )
     # one task writes one file, empty frames included (it carries the schema)
     (part,) = glob.glob(os.path.join(tmp, "part-*.parquet"))
-    os.replace(part, os.path.join(path, f"run-{key}.parquet"))
+    os.replace(part, dst)
     shutil.rmtree(tmp)
-
-
-def read_metrics(
-    spark: SparkSession, out_dir: str, name: str = "_metrics"
-) -> DataFrame:
-    return spark.read.parquet(f"{out_dir}/{name}")

@@ -23,6 +23,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kgforge.checkpoint import publishing, settle
+
 # triple-table lineage: v1 predates qualifier language + source
 # timestamp and spelled qual_kind as quality_kind (the BASIS/ENR_BASIS
 # style misnaming)
@@ -77,9 +79,12 @@ def migrate_triples(
     spark: SparkSession, path: str, to_version: int = max(TRIPLE_MIGRATIONS)
 ) -> dict:
     """Bring a parquet triple table to `to_version`. Reads, applies the
-    pending migration specs in order, rewrites atomically (temp dir +
-    rename), stamps _schema_version. Re-running returns without touching
-    data — the idempotence the reference's ALTER scripts lack."""
+    pending migration specs in order, and publishes the rewritten table
+    with its _schema_version stamp in one step (checkpoint.publishing),
+    so a crash leaves the old version or the new. Re-running returns
+    without touching data — the idempotence the reference's ALTER
+    scripts lack."""
+    settle(path)
     cur = table_version(path)
     if cur >= to_version:
         return {"path": path, "version": cur, "migrated": False}
@@ -89,23 +94,12 @@ def migrate_triples(
         if cur < v <= to_version:
             df = evolve(df, TRIPLE_MIGRATIONS[v])
             applied.append(v)
-    tmp = path.rstrip("/") + f"._migrating_v{to_version}"
     # preserve the pred-partitioned layout run_pipeline creates: a plain
     # rewrite would silently demote pred to a data column and pred-pruned
     # reads would lose partition pruning after migration
-    pred_partitioned = any(
-        e.startswith("pred=") for e in os.listdir(path)
-    ) and "pred" in df.columns
-    writer = df.write.mode("overwrite")
-    if pred_partitioned:
-        writer = writer.partitionBy("pred")
-    writer.parquet(tmp)
-    import shutil
-
-    old = path.rstrip("/") + f"._pre_v{to_version}"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    with open(_version_path(path), "w") as f:
-        json.dump({"version": to_version, "applied": applied}, f)
+    pred = any(e.startswith("pred=") for e in os.listdir(path))
+    with publishing(path) as tmp:
+        df.write.parquet(tmp, partitionBy="pred" if pred else None)
+        with open(_version_path(tmp), "w") as f:
+            json.dump({"version": to_version, "applied": applied}, f)
     return {"path": path, "version": to_version, "migrated": True, "applied": applied}

@@ -21,6 +21,7 @@ Two consumers:
 from __future__ import annotations
 
 import functools
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,7 +34,7 @@ from kgforge.conf import NEAR_DUP_THRESHOLD
 from kgforge.extract import extract_pages, extract_text_udf
 from kgforge.mentions import detect_mentions
 from kgforge.link import attach_qualifiers, link_mentions
-from kgforge.metrics import triple_report, write_metrics
+from kgforge.metrics import metrics_file, triple_report, write_metrics
 from kgforge.sources import HTML_PREFIX, HTML_SUFFIX, pages_from_documents, read_table
 
 
@@ -120,7 +121,9 @@ def run_pipeline(
         partition_by=["pred"],
     )
     emitted = cp.results[-1]
-    if not emitted.skipped:
+    # the report follows the triples manifest; a run cut between the two
+    # writes it on its next submission (a stat, no job, on a resume)
+    if not emitted.skipped or not os.path.exists(metrics_file(out_dir, run_id)):
         write_metrics(triple_report(triples), out_dir, run_id)
     return {
         "out_dir": out_dir,

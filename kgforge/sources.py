@@ -16,6 +16,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from kgforge.checkpoint import publishing
+
 TPCH_TABLES = (
     "region nation customer supplier part orders lineitem events "
     "documents embeddings"
@@ -167,7 +169,9 @@ def write_triples(
     `writeTo(...).overwritePartitions()` path on a table partitioned by
     pred (+ bucket(subj) in the table's partition spec); otherwise it
     writes parquet partitioned by pred — the same pruning behavior for
-    readers. Returns which sink was used ('iceberg' | 'parquet').
+    readers; a parquet overwrite goes through checkpoint.publishing, so
+    a failed write leaves the old target readable. Returns which sink
+    was used ('iceberg' | 'parquet').
 
     `table_writer` injects the DataFrameWriterV2 factory (defaults to
     `df.writeTo`) so the identifier branch's mode/routing logic is unit-
@@ -192,5 +196,9 @@ def write_triples(
         else:
             w.append()
         return "iceberg"
-    df.write.mode(mode).partitionBy("pred").parquet(target)
+    if mode == "overwrite":  # published: a failing write leaves the old table
+        with publishing(target.removeprefix("file:")) as tmp:
+            df.write.partitionBy("pred").parquet(tmp)
+    else:
+        df.write.mode(mode).partitionBy("pred").parquet(target)
     return "parquet"

@@ -69,17 +69,10 @@ def driver_memory() -> str:
 
 
 def _local_dirs() -> str | None:
-    """Shuffle/spill directories. On this bench box /tmp is a virtual
-    ext4 disk while /dev/shm is a 128G tmpfs; 32 concurrent shuffle
-    writers serialize on the one disk, so spill to RAM (a stand-in for
-    the NVMe-backed local dirs a real cluster provisions per executor).
-    Overridable via KGF_LOCAL_DIR; falls back to Spark's default."""
-    d = os.environ.get("KGF_LOCAL_DIR")
-    if d:
-        return d
-    if os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):
-        return "/dev/shm/kgf_spark"
-    return None
+    """Shuffle/spill directories: KGF_LOCAL_DIR when set, else Spark's
+    default (SPARK_LOCAL_DIRS or the temp dir). Never RAM-backed by
+    default: spill would compete with the heap for the host's memory."""
+    return os.environ.get("KGF_LOCAL_DIR") or None
 
 
 def get_spark(

@@ -171,11 +171,25 @@ def emit_span_triples(
 
     obj is the ISO-8601 interval "start/end"; basis rides in qual_kind,
     the CHART 'Y' analog in qual_comparator, span length in days in
-    qual_value_num."""
-    p = pages.join(mapping, "url", "left").withColumn(
-        "subj", F.coalesce("canon_url", F.col("url"))
+    qual_value_num. A crawl batch feeds span_triples its own
+    observations plus each touched subject's stored span
+    (kgforge.incremental)."""
+    return span_triples(span_observations(pages, mapping), periods)
+
+
+def span_observations(pages: DataFrame, mapping: DataFrame) -> DataFrame:
+    """(url, warc_ts, subj): each page's crawl timestamp keyed by its
+    canonical subject — the visit rows span_triples aggregates."""
+    return pages.join(mapping, "url", "left").select(
+        "url", "warc_ts", F.coalesce("canon_url", F.col("url")).alias("subj")
     )
-    spans = p.groupBy("subj").agg(
+
+
+def span_triples(obs: DataFrame, periods: DataFrame | None = None) -> DataFrame:
+    """hasSpan rows from observations (url, warc_ts, subj): min/max
+    warc_ts per subject, min url as the source, overridden by an
+    optional curated-periods table (see emit_span_triples)."""
+    spans = obs.groupBy("subj").agg(
         F.min("warc_ts").alias("obs_start"),
         F.max("warc_ts").alias("obs_end"),
         F.min("url").alias("src_url"),

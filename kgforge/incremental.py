@@ -11,10 +11,14 @@ Iceberg deployment would use:
 - Canonicalization delta: the base corpus contributes only its stored
   MinHash SIGNATURES (a sidecar table built once, appended per batch) —
   new-vs-base candidate pairs come from an LSH-block equi-join of the
-  batch's blocks against the base's, capped+counted per block exactly
-  like the full run; exact-Jaccard verification reads base TEXT only
-  for the few candidate urls (left-semi pruned scan of the stored
-  `extracted` stage).
+  batch's blocks against the base's, new-new pairs from the full run's
+  candidate_pairs over the batch's blocks, each capped and its dropped
+  blocks recorded in the batch's `_metrics_canon`. Both pair sets go
+  through ONE exact-Jaccard verification (the build's
+  verify_pairs_jaccard), which reads base TEXT only for the base urls
+  in a candidate pair (left-semi pruned scan of the stored `extracted`
+  stage); its materialized edges yield the anchors, the batch's
+  connected components and the new-vs-base edge count.
 - Representative STABILITY: a new page near-duplicating a base page
   adopts the base component's canonical subject — base triples are
   never re-keyed. A batch component whose members collectively verify
@@ -25,15 +29,17 @@ Iceberg deployment would use:
   Re-keying the base is deferred to the NEXT FULL RUN — compact()
   materializes the merge-on-read view and folds stage sidecars but
   deliberately does not re-key existing subjects.
-- Span rows merge with the stored per-subject span arithmetically:
-  ISO-8601 UTC strings compare lexicographically, so the merged
-  interval is string min/max — no parsing. Curated ('A'-basis) spans
+- Spans come from the build's own aggregation (emit.span_triples), fed
+  the batch's page observations plus each touched subject's stored
+  observed span as two observations (its start and its end), so the
+  merged interval is the min/max over both. Curated ('A'-basis) spans
   are never overridden by observed increments.
 - Scope: batch urls are NEW pages. A re-crawl of an existing url (same
   url, newer snapshot) is an upstream concern — version the url by
   warc_ts before ingestion (url#ts), exactly as a Common-Crawl WARC
   pipeline keys snapshots; triple provenance keeps src_url + src_ts.
-- Increments land under out_dir/increments/batch-NNNNN/triples;
+- Increments land under out_dir/increments/batch-NNNNN/triples (next
+  to the batch's mapping, extracted, _checkpoints and _metrics_canon);
   read_triples() presents base + increments with span supersedence
   (merge-on-read); compact() materializes that view as the new base
   (compaction) and clears increments.
@@ -60,6 +66,7 @@ from kgforge.checkpoint import CheckpointManager, _footer_row_count, publishing,
 from kgforge.conf import NEAR_DUP_THRESHOLD
 from kgforge.extract import extract_pages
 from kgforge.link import link_mentions
+from kgforge.metrics import write_metrics
 from kgforge.mentions import detect_mentions
 from kgforge.operators import bloom as B
 
@@ -112,10 +119,11 @@ def _capped_block_join(
     capped AND counted (no-silent-caps, SURVEY.md §7.5).
 
     The cap is on the COMBINED block size (n_new + n_base <= max_block),
-    mirroring the full-refresh candidate_pairs semantics exactly: a
-    block the full run would drop at total size > max_block is dropped
-    here too, so incremental and full refresh agree near the cap (the
-    equivalence property test's contract)."""
+    as the full run's candidate_pairs caps a block of the whole corpus.
+    The batch's new-new pairs come from candidate_pairs over the batch's
+    blocks alone, so they are capped on the batch's own block size: a
+    block over the cap only in combination loses its new-vs-base pairs
+    but keeps its new-new ones, where a full run would drop both."""
     sn = new_blocks.groupBy("bk").agg(F.count(F.lit(1)).alias("n_new"))
     sb = base_blocks.groupBy("bk").agg(F.count(F.lit(1)).alias("n_base"))
     # only blocks present on BOTH sides matter; materialized once, so the
@@ -181,11 +189,12 @@ def incremental_update(
     auto_compact_after: int | None = 8,
 ) -> dict:
     # crash-safe publication: every batch artifact is a checkpointed
-    # stage of the hidden dir `publishing` hands out, and the swap at the
-    # end of the block is the commit point. _increment_dirs only matches
-    # ^batch-\d{5}$, so a half-written batch from a crashed run is
-    # invisible to read_triples and wiped by the retry — no partial batch
-    # can ever enter the merge-on-read view. The signature append is the
+    # stage (or the _metrics_canon record) of the hidden dir `publishing`
+    # hands out, and the swap at the end of the block is the commit
+    # point. _increment_dirs only matches ^batch-\d{5}$, so a
+    # half-written batch from a crashed run is invisible to read_triples
+    # and wiped by the retry — no partial batch can ever enter the
+    # merge-on-read view. The signature append is the
     # last step before the swap (a batch must never be visible without
     # its sigs); a crash between the two leaves orphaned sidecar rows,
     # which the guard on base_sigs below absorbs.
@@ -244,32 +253,36 @@ def incremental_update(
         nb_pairs, nb_dropped = _capped_block_join(
             new_blocks, base_blocks, C.MAX_LSH_BLOCK
         )
-        nn_pairs, nn_metrics = C.candidate_pairs(new_blocks, id_col="url")
+        nn_pairs, nn_dropped = C.candidate_pairs(new_blocks, id_col="url")
+        # column a is always the batch url, and batch urls are new, so the
+        # new-vs-base and new-new pair sets are disjoint
+        pairs = nb_pairs.unionByName(nn_pairs).localCheckpoint(eager=True)
 
-        # exact verification: batch text + ONLY the base urls that appear in
-        # a candidate pair (left-semi pruned scan of the stored stage)
-        base_cand_urls = nb_pairs.select(F.col("b").alias("url")).distinct()
+        # one exact verification: batch text + ONLY the base urls that
+        # appear in a candidate pair (left-semi pruned scan of the stored
+        # stage); the edges are consumed by the anchors, the batch
+        # components and the edge count
         texts = ext.select("url", "text").unionByName(
-            base_ext.join(base_cand_urls, "url", "left_semi")
+            base_ext.join(pairs.select(F.col("b").alias("url")), "url", "left_semi")
         )
-        v_nb = C.verify_pairs_jaccard(nb_pairs, texts, threshold).cache()
-        v_nn = C.verify_pairs_jaccard(nn_pairs, texts, threshold)
+        edges = C.verify_pairs_jaccard(pairs, texts, threshold).localCheckpoint(
+            eager=True
+        )
 
-        # distinct (new url, base canonical) anchoring pairs; per-url min
-        # anchor drives the mapping below
-        url_anchor = (
-            v_nb.join(
-                base_mapping.select(F.col("url").alias("b"), "canon_url"), "b"
-            )
-            .select(F.col("a").alias("url"), "canon_url")
-            .distinct()
-            .localCheckpoint(eager=True)  # consumed by mapping AND deferral count
-        )
+        # (new url, base canonical) anchoring edges — a new-new edge's b has
+        # no base mapping row; per-url min anchor drives the mapping below
+        nb_edges = edges.join(
+            base_mapping.select(F.col("url").alias("b"), "canon_url"), "b"
+        ).select(F.col("a").alias("url"), "canon_url")
+        url_anchor = nb_edges.distinct()
         anchors = url_anchor.groupBy("url").agg(F.min("canon_url").alias("anchor"))
 
-        # components among the batch, then adopt the min anchor per component
+        # components among the batch (new-new edges only: a base url inside
+        # a component would change which canonical a bridging component
+        # adopts), then adopt the min anchor per component
+        nn_edges = edges.join(ext.select(F.col("url").alias("b")), "b", "left_semi")
         comps = C.connected_components(
-            v_nn.select(F.col("a").alias("src"), F.col("b").alias("dst"))
+            nn_edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
         )
         node_comp = (
             ext.select("url")
@@ -293,46 +306,28 @@ def incremental_update(
         )
 
         # --- emission --------------------------------------------------------
-        # the full run's emitters, with their observed spans replaced by the
-        # stored span of each subject (if any) widened by the batch's
-        # per-subject min/max — lexicographic min/max on the ISO obj halves;
-        # curated ('A') stored spans are never overridden
+        # the full run's emitters, with their observed spans replaced by
+        # the build's span aggregation over the batch's observations plus
+        # each touched subject's stored observed ('E') span as two
+        # observations (its start and its end, from its source url);
+        # subjects with a curated ('A') stored span keep it
         sparse = mapping_new.filter(F.col("url") != F.col("canon_url"))
-        new_spans = E.emit_span_triples(ext, sparse).select(
-            "subj",
-            F.split("obj", "/").getItem(0).alias("n_start"),
-            F.split("obj", "/").getItem(1).alias("n_end"),
-            "src_url",
-        )
+        new_obs = E.span_observations(ext, sparse)
         stored = read_triples(spark, out_dir).filter(F.col("pred") == "hasSpan")
-        stored_spans = stored.select(
+        touched = stored.join(new_obs.select("subj"), "subj", "left_semi")
+        observed = touched.filter(F.col("qual_kind") == "E").select(
             "subj",
-            F.split("obj", "/").getItem(0).alias("s_start"),
-            F.split("obj", "/").getItem(1).alias("s_end"),
-            F.col("qual_kind").alias("s_basis"),
-            F.col("src_url").alias("s_src"),
+            F.col("src_url").alias("url"),
+            F.explode(
+                F.array(
+                    F.to_timestamp(F.split("obj", "/").getItem(0), E.ISO_FMT),
+                    F.col("src_ts"),
+                )
+            ).alias("warc_ts"),
         )
-        m = new_spans.join(stored_spans, "subj", "left").filter(
-            (F.col("s_basis").isNull()) | (F.col("s_basis") == "E")
-        )
-        start = F.least("n_start", "s_start")  # least/greatest skip NULLs
-        end = F.greatest("n_end", "s_end")
-        obj = F.concat_ws("/", start, end)
-        ts_start, ts_end = F.to_timestamp(start, E.ISO_FMT), F.to_timestamp(end, E.ISO_FMT)
-        span_rows = m.select(
-            F.xxhash64(F.col("subj"), F.lit("hasSpan"), obj).alias("triple_id"),
-            "subj",
-            F.lit("hasSpan").alias("pred"),
-            obj.alias("obj"),
-            F.lit("E").alias("qual_kind"),
-            F.lit("Y").alias("qual_comparator"),
-            ((F.unix_micros(ts_end) - F.unix_micros(ts_start)) / 86400000000.0).alias(
-                "qual_value_num"
-            ),
-            F.lit(None).cast("string").alias("qual_lang"),
-            F.lit(None).cast("string").alias("raw_surface"),
-            F.least(F.col("src_url"), F.col("s_src")).alias("src_url"),
-            ts_end.alias("src_ts"),
+        curated = touched.filter(F.col("qual_kind") == "A").select("subj")
+        span_rows = E.span_triples(
+            new_obs.join(curated, "subj", "left_anti").unionByName(observed)
         )
         cp.run_stage(
             "triples",
@@ -342,16 +337,19 @@ def incremental_update(
             .unionByName(span_rows),
             partition_by=["pred"],
         )
-        # counted before the sidecar append, which invalidates cached plans
-        # over the sidecar (v_nb)
+        # the capped blocks of both block joins, recorded with the batch
+        # (no silent caps) and counted from the written file's footer
+        write_metrics(
+            nb_dropped.unionByName(nn_dropped), tmp_dir, batch, name="_metrics_canon"
+        )
         rows = {r.stage: r.rows_out for r in cp.results}
         out = {
             "batch": batch,
             "n_new_pages": rows["extracted"],
             "n_delta_triples": rows["triples"],
-            "n_new_base_edges": v_nb.count(),
+            "n_new_base_edges": nb_edges.count(),
             "deferred_base_merges": deferred,
-            "n_capped_blocks": nb_dropped.count() + nn_metrics.count(),
+            "n_capped_blocks": _footer_row_count(os.path.join(tmp_dir, "_metrics_canon")),
             "compacted": False,
         }
         new_sigs.write.mode("append").parquet(sig_path)

@@ -262,30 +262,6 @@ def _propagate_distributed(dic: DataFrame, max_depth: int = 20) -> DataFrame:
     )
 
 
-def split_scheme(dic: DataFrame) -> DataFrame:
-    """scheme:value split of canonical_id (SUBSTR/INSTR at
-    Oracle/PCORNetLoader_ora.sql:1474 and 10+ other sites)."""
-    return dic.withColumn(
-        "scheme", F.substring_index("canonical_id", ":", 1)
-    ).withColumn("code", F.substring_index("canonical_id", ":", -1))
-
-
-def domain_of(dic: DataFrame) -> DataFrame:
-    """Pre-materialize the path-prefix domain (the '\\PCORI\\DIAGNOSIS\\%'
-    LIKE family, Oracle/PCORNetLoader_ora.sql:1120 etc.) as a column so
-    downstream predicates constant-fold and prune instead of re-running
-    string matches."""
-    return dic.withColumn(
-        "domain", F.element_at(F.split(F.col("concept_path"), r"\\"), 3)
-    )
-
-
-def load_dictionary(spark: SparkSession, path: str) -> DataFrame:
-    """Load + full cleanup pipeline; result is broadcast at use sites."""
-    raw = spark.read.parquet(path)
-    return domain_of(dedup_by_preference(propagate_hierarchy(clean_dictionary(raw))))
-
-
 def linker_inputs(raw: DataFrame) -> tuple[DataFrame, list[str]]:
     """The two things the linking stages take from a raw dictionary: the
     cleaned, propagated dictionary link_mentions joins against and the

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from kgforge.checkpoint import publishing
 from kgforge.sources import read_table
 
 EVENTS_SCHEMA = T.StructType(
@@ -470,16 +471,18 @@ def run_stream_exactly_once_restart(
     of the batch pipeline's crash-safe checkpoint discipline
     (kgforge/checkpoint.py, kgforge/incremental.py).
 
-    foreachBatch writes each micro-batch to `out_dir/bid=<batchId>` with
-    mode=overwrite: the batchId is stable across a replay (the file
-    source's offset log pins which input files batch N contains), so an
-    idempotent per-batch overwrite makes the sink exactly-once even
-    though foreachBatch itself is at-least-once. The first query CRASHES
+    foreachBatch publishes each micro-batch as `out_dir/bid=<batchId>`
+    through checkpoint.publishing (written hidden, swapped in whole): the
+    batchId is stable across a replay (the file source's offset log pins
+    which input files batch N contains), so an idempotent per-batch
+    replace makes the sink exactly-once even though foreachBatch itself
+    is at-least-once, and a crash mid-write never leaves a partial
+    `bid=` directory for readers. The first query CRASHES
     after the write for batch `fail_after` lands but before Structured
     Streaming records the batch commit — the worst-case window, where an
     at-least-once sink without idempotence would double the batch. A
     second query started on the SAME checkpoint replays that batch
-    (same id, same input files, overwriting the same directory) and
+    (same id, same input files, replacing the same directory) and
     drains the remaining input.
 
     Returns (sink_rows, batch_rows, batch_ids): the recovered sink's
@@ -499,7 +502,8 @@ def run_stream_exactly_once_restart(
 
     def make_sink(crash_at: int | None):
         def sink(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df.write.mode("overwrite").parquet(f"{out_dir}/bid={batch_id}")
+            with publishing(f"{out_dir}/bid={batch_id}") as tmp:
+                batch_df.write.parquet(tmp)
             if crash_at is not None and batch_id == crash_at:
                 raise _InjectedCrash(f"injected crash after batch {batch_id}")
 

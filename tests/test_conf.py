@@ -1,6 +1,6 @@
 import os
 
-from kgforge.conf import driver_memory, spark_cpus
+from kgforge.conf import _local_dirs, driver_memory, spark_cpus
 
 
 def test_spark_cpus_defaults_to_host_cores(monkeypatch):
@@ -21,3 +21,12 @@ def test_driver_memory_fits_the_host(monkeypatch):
     assert int(driver_memory()[:-1]) <= half_mb
     monkeypatch.setenv("KGF_DRIVER_MEM", "2g")
     assert driver_memory() == "2g"
+
+
+def test_spill_defaults_to_spark(monkeypatch):
+    """Without KGF_LOCAL_DIR spill goes where Spark puts it by default,
+    never to RAM-backed storage; the variable still overrides it."""
+    monkeypatch.delenv("KGF_LOCAL_DIR", raising=False)
+    assert _local_dirs() is None
+    monkeypatch.setenv("KGF_LOCAL_DIR", "/tmp/kgf_spill")
+    assert _local_dirs() == "/tmp/kgf_spill"

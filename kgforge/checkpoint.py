@@ -8,11 +8,20 @@ completed work and produces the *identical* triple set (all ids are
 content hashes, so replays are idempotent).
 
 Manifest layout (out_dir/_checkpoints/<stage>.json):
-  {run_id, stage, rows_out, wall_s, finished_ts, input_fingerprint}
+  {run_id, stage, rows_out, wall_s, jobs, finished_ts, input_fingerprint}
 
 A stage runs only when its manifest entry is missing or its input
 fingerprint changed. A skipped stage reports the rows_out its manifest
 recorded, so a resume reads every count without touching the data.
+A computed stage runs under a Spark job group named after it, and
+`jobs` is the number of Spark jobs that group ran.
+
+Reading: every directory kgforge wrote (stage outputs, crawl batches,
+the signature sidecar, the compacted base, the metrics tables) is read
+by `read_own`, which takes the schema Spark stored in the first data
+file's footer instead of running Spark's schema-inference job, so a
+resume into a finished out dir runs no Spark job at all. External
+inputs keep Spark's inference.
 
 Publishing: `publishing(path)` hands out a hidden sibling to write and
 swaps it in with two renames when the block ends; `settle(path)`
@@ -40,6 +49,7 @@ from dataclasses import dataclass
 
 from pyspark.errors import PySparkRuntimeError
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StringType, StructType
 
 
 @dataclass
@@ -86,15 +96,16 @@ class CheckpointManager:
         done = self._finished(stage, input_fingerprint)
         if done is not None:
             self.results.append(StageResult(stage, done["rows_out"], 0.0, skipped=True))
-            return self.spark.read.parquet(path)
+            return read_own(self.spark, path)
         # a manifest must never outlive the data it describes: a crash
         # between the swap below and the new manifest then recomputes
         if os.path.exists(self._manifest_path(stage)):
             os.remove(self._manifest_path(stage))
         t0 = time.time()
-        df = build()
-        with publishing(path) as tmp:
-            df.write.parquet(tmp, partitionBy=partition_by)
+        with _job_group(self.spark, stage) as jobs:
+            df = build()
+            with publishing(path) as tmp:
+                df.write.parquet(tmp, partitionBy=partition_by)
         # row count from parquet footers — metadata-only, no second full
         # scan of the stage output (the Iceberg deployment reads this
         # from snapshot manifests; same discipline here)
@@ -107,13 +118,14 @@ class CheckpointManager:
                     "stage": stage,
                     "rows_out": rows,
                     "wall_s": round(wall, 3),
+                    "jobs": jobs(),
                     "finished_ts": time.time(),
                     "input_fingerprint": input_fingerprint,
                 },
                 f,
             )
         self.results.append(StageResult(stage, rows, wall, skipped=False))
-        return self.spark.read.parquet(path)
+        return read_own(self.spark, path)
 
     def manifest(self) -> list[dict]:
         """Every decodable stage manifest (a torn one is no manifest)."""
@@ -147,6 +159,50 @@ def _footer_row_count(path: str) -> int:
 
 def _parquet_files(path: str) -> list[str]:
     return sorted(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
+
+
+_JOB_GROUP_PROPS = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+
+
+@contextmanager
+def _job_group(spark: SparkSession, group: str):
+    """Run the block's Spark jobs in job group `group`; yields a callable
+    returning how many jobs the block ran. The caller's group is restored
+    afterwards."""
+    sc = spark.sparkContext
+    caller = [sc.getLocalProperty(k) for k in _JOB_GROUP_PROPS]
+    before = set(sc.statusTracker().getJobIdsForGroup(group))
+    sc.setJobGroup(group, group)
+    try:
+        yield lambda: len(set(sc.statusTracker().getJobIdsForGroup(group)) - before)
+    finally:
+        for k, v in zip(_JOB_GROUP_PROPS, caller):
+            sc.setLocalProperty(k, v)
+
+
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def read_own(spark: SparkSession, *paths: str) -> DataFrame:
+    """Read parquet directories kgforge wrote, with the schema Spark
+    stored in the footer of the first data file: no schema-inference
+    job. `k=v` partition columns are appended as strings, and the file
+    source marks every field nullable, so the schema is the one Spark's
+    inference gives. A directory without such a footer falls back to
+    inference."""
+    import pyarrow.parquet as pq
+
+    root, first = next(
+        ((p, fs[0]) for p in paths if (fs := _parquet_files(p))), (None, None)
+    )
+    meta = first and (pq.read_metadata(first).metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if not meta:
+        return spark.read.parquet(*paths)
+    schema = StructType.fromJson(json.loads(meta))
+    for part in os.path.relpath(os.path.dirname(first), root).split(os.sep):
+        if "=" in part:
+            schema.add(part.split("=", 1)[0], StringType())
+    return spark.read.schema(schema).parquet(*paths)
 
 
 def _siblings(path: str) -> tuple[str, str]:

@@ -137,9 +137,10 @@ def main(argv: list[str] | None = None) -> int:
             periods_path=args.periods_path,
         )
         if args.publish:
+            from kgforge.checkpoint import read_own
             from kgforge.sources import write_triples
 
-            triples = spark.read.parquet(f"{args.out}/triples")
+            triples = read_own(spark, f"{args.out}/triples")
             info["published"] = write_triples(triples, args.publish)
             info["publish_target"] = args.publish
         print(json.dumps(info))

@@ -13,12 +13,14 @@ Iceberg deployment would use:
   new-vs-base candidate pairs come from an LSH-block equi-join of the
   batch's blocks against the base's, new-new pairs from the full run's
   candidate_pairs over the batch's blocks, each capped and its dropped
-  blocks recorded in the batch's `_metrics_canon`. Both pair sets go
-  through ONE exact-Jaccard verification (the build's
-  verify_pairs_jaccard), which reads base TEXT only for the base urls
-  in a candidate pair (left-semi pruned scan of the stored `extracted`
-  stage); its materialized edges yield the anchors, the batch's
-  connected components and the new-vs-base edge count.
+  blocks recorded in the batch's `_metrics_canon`; a block over the cap
+  only with its base members counted yields no new-new pairs either,
+  as the full run drops it whole. Both pair sets go through ONE
+  exact-Jaccard verification (the build's verify_pairs_jaccard), which
+  reads base TEXT only for the base urls in a candidate pair (left-semi
+  pruned scan of the stored `extracted` stage); its materialized edges
+  yield the anchors, the batch's connected components and the
+  new-vs-base edge count.
 - Representative STABILITY: a new page near-duplicating a base page
   adopts the base component's canonical subject — base triples are
   never re-keyed. A batch component whose members collectively verify
@@ -47,6 +49,11 @@ Iceberg deployment would use:
   signature sidecar, the compacted base, the cleared increments) is
   published through checkpoint.publishing, so a crash leaves each one
   complete or absent; the readers settle a swap a crash cut short.
+- Every directory this module reads back (base stages, committed
+  increments, the signature sidecar, the merge-on-read view) is read
+  through checkpoint.read_own, which takes its schema from the parquet
+  footer Spark wrote and so runs no schema-inference job; only the new
+  pages and the dictionary, external inputs, are inferred.
 """
 
 from __future__ import annotations
@@ -62,7 +69,13 @@ from pyspark.sql.window import Window
 from kgforge import canon as C
 from kgforge import emit as E
 from kgforge import ontology as O
-from kgforge.checkpoint import CheckpointManager, _footer_row_count, publishing, settle
+from kgforge.checkpoint import (
+    CheckpointManager,
+    _footer_row_count,
+    publishing,
+    read_own,
+    settle,
+)
 from kgforge.conf import NEAR_DUP_THRESHOLD
 from kgforge.extract import extract_pages
 from kgforge.link import link_mentions
@@ -97,7 +110,7 @@ def read_committed(
         for d in _increment_dirs(out_dir)
     )
     paths = [os.path.join(out_dir, base), *filter(os.path.isdir, incs)]
-    return spark.read.parquet(*paths).select(*cols)
+    return read_own(spark, *paths).select(*cols)
 
 
 def _ensure_signature_sidecar(spark: SparkSession, out_dir: str) -> str:
@@ -106,7 +119,7 @@ def _ensure_signature_sidecar(spark: SparkSession, out_dir: str) -> str:
     incremental ever does, and only on the first increment."""
     sig_path = os.path.join(out_dir, "signatures")
     if not os.path.isdir(sig_path):
-        base_ext = spark.read.parquet(os.path.join(out_dir, "extracted"))
+        base_ext = read_own(spark, os.path.join(out_dir, "extracted"))
         with publishing(sig_path) as tmp:
             C.minhash_signatures(base_ext, "text", "url").write.parquet(tmp)
     return sig_path
@@ -114,16 +127,17 @@ def _ensure_signature_sidecar(spark: SparkSession, out_dir: str) -> str:
 
 def _capped_block_join(
     new_blocks: DataFrame, base_blocks: DataFrame, max_block: int
-) -> tuple[DataFrame, DataFrame]:
+) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(new url a) x (base url b) pairs sharing an LSH block, hub blocks
-    capped AND counted (no-silent-caps, SURVEY.md §7.5).
+    capped AND counted (no-silent-caps, SURVEY.md §7.5). Returns (pairs,
+    the batch blocks left for the new-new pairs, dropped blocks).
 
     The cap is on the COMBINED block size (n_new + n_base <= max_block),
     as the full run's candidate_pairs caps a block of the whole corpus.
-    The batch's new-new pairs come from candidate_pairs over the batch's
-    blocks alone, so they are capped on the batch's own block size: a
-    block over the cap only in combination loses its new-vs-base pairs
-    but keeps its new-new ones, where a full run would drop both."""
+    A block over the cap only in combination leaves the batch's blocks
+    too, so it yields no new-new pairs either, as in a full run; a block
+    over the cap on the batch's side alone stays, and candidate_pairs
+    drops and records it."""
     sn = new_blocks.groupBy("bk").agg(F.count(F.lit(1)).alias("n_new"))
     sb = base_blocks.groupBy("bk").agg(F.count(F.lit(1)).alias("n_base"))
     # only blocks present on BOTH sides matter; materialized once, so the
@@ -133,9 +147,13 @@ def _capped_block_join(
     keep = sizes.filter(
         (F.col("n_new") + F.col("n_base")) <= max_block
     ).select("bk")
-    dropped = sizes.filter(
-        (F.col("n_new") + F.col("n_base")) > max_block
-    ).select(
+    over = sizes.filter((F.col("n_new") + F.col("n_base")) > max_block)
+    nn_blocks = new_blocks.join(
+        F.broadcast(over.filter(F.col("n_new") <= max_block).select("bk")),
+        "bk",
+        "left_anti",
+    )
+    dropped = over.select(
         F.lit("incr_block_dropped").alias("metric"),
         F.col("bk").cast("string").alias("key"),
         # pairs avoided; multiply in double, then clamp to the largest
@@ -157,7 +175,7 @@ def _capped_block_join(
         .select("a", "b")
         .distinct()
     )
-    return pairs, dropped
+    return pairs, nn_blocks, dropped
 
 
 def deferred_merge_count(node_comp: DataFrame, url_anchor: DataFrame) -> int:
@@ -221,7 +239,7 @@ def incremental_update(
         # pairs inflate n_new_base_edges / n_capped_blocks (the mapping was
         # always safe — orphans miss base_mapping — but metrics lied).
         base_sigs = (
-            spark.read.parquet(sig_path)
+            read_own(spark, sig_path)
             .dropDuplicates(["url"])
             .join(base_mapping.select("url"), "url", "left_semi")
         )
@@ -250,10 +268,10 @@ def incremental_update(
         base_blocks = B.bloom_prune(
             C.lsh_blocks(base_sigs, id_col="url"), B.h64_xx(F.col("bk")), nb_bloom
         )
-        nb_pairs, nb_dropped = _capped_block_join(
+        nb_pairs, nn_blocks, nb_dropped = _capped_block_join(
             new_blocks, base_blocks, C.MAX_LSH_BLOCK
         )
-        nn_pairs, nn_dropped = C.candidate_pairs(new_blocks, id_col="url")
+        nn_pairs, nn_dropped = C.candidate_pairs(nn_blocks, id_col="url")
         # column a is always the batch url, and batch urls are new, so the
         # new-vs-base and new-new pair sets are disjoint
         pairs = nb_pairs.unionByName(nn_pairs).localCheckpoint(eager=True)
@@ -368,12 +386,12 @@ def read_triples(spark: SparkSession, out_dir: str) -> DataFrame:
     (increments emit the fully-merged span, so latest-wins is exact).
     All other rows are set-union (triples are identity-keyed facts)."""
     settle(os.path.join(out_dir, "triples"))  # a compaction cut mid-swap
-    t = spark.read.parquet(os.path.join(out_dir, "triples")).withColumn(
+    t = read_own(spark, os.path.join(out_dir, "triples")).withColumn(
         "_batch", F.lit(0)
     )
     for i, d in enumerate(_increment_dirs(out_dir), start=1):
-        inc = spark.read.parquet(
-            os.path.join(out_dir, "increments", d, "triples")
+        inc = read_own(
+            spark, os.path.join(out_dir, "increments", d, "triples")
         ).withColumn("_batch", F.lit(i))
         t = t.unionByName(inc)
     spans = t.filter(F.col("pred") == "hasSpan")

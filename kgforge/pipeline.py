@@ -72,10 +72,12 @@ def run_pipeline(
 
     # scan splits come from spark.sql.files.maxPartitionBytes (8MB in
     # kgforge.conf) — no repartition shuffle; the parquet scan itself
-    # fans out to every core
-    pages = spark.read.parquet(pages_path)
+    # fans out to every core. The pages input is opened only when the
+    # stage computes: its schema inference is a Spark job
     extracted = cp.run_stage(
-        "extracted", lambda: extract_pages(pages, langs), fp_extract
+        "extracted",
+        lambda: extract_pages(spark.read.parquet(pages_path), langs),
+        fp_extract,
     )
 
     # the dictionary is prepared only by a stage that computes, at most

@@ -594,6 +594,7 @@ def stream_incremental_ingest(
     Returns the number of increments ingested by this call."""
     import os
 
+    from kgforge.checkpoint import _footer_row_count
     from kgforge.incremental import incremental_update, read_committed
 
     n_ingested = 0
@@ -604,7 +605,7 @@ def stream_incremental_ingest(
         fresh = batch_df.join(known, "url", "left_anti")
         p = os.path.join(work_dir, f"stream_batch_{batch_id}")
         fresh.write.mode("overwrite").parquet(p)
-        if spark.read.parquet(p).limit(1).count() == 0:
+        if _footer_row_count(p) == 0:
             return  # replayed batch: everything already committed
         incremental_update(spark, out_dir, p, dict_path, auto_compact_after=None)
         n_ingested += 1

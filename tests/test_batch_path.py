@@ -145,3 +145,38 @@ def test_batch_records_capped_blocks(spark, fixture_dir, base, tmp_path, monkeyp
     assert len(by_metric["incr_block_dropped"]) == 32
     assert all(v >= n and v % n == 0 for v in by_metric["incr_block_dropped"])
     assert info["n_new_base_edges"] == 0
+
+
+def test_block_over_the_cap_only_with_the_base_drops_its_batch_pairs(
+    spark, fixture_dir, tmp_path, monkeypatch
+):
+    """k identical base pages and m identical batch pages share every
+    block, with the cap between m and k + m: the full run drops the
+    whole block, so the batch keeps no new-new pairs either, and the
+    incremental view equals the full refresh triple for triple."""
+    k, m, cap = 10, 3, 8
+    ts = dt.datetime(2024, 1, 1)
+    base_rows = [_page(f"https://capk.example.com/{i:02d}", ts, DUP) for i in range(k)]
+    batch_rows = [_page(f"https://capm.example.com/{i:02d}", ts, DUP) for i in range(m)]
+    pa = _write(spark, base_rows, str(tmp_path / "a.parquet"))
+    pb = _write(spark, batch_rows, str(tmp_path / "b.parquet"))
+    pab = _write(spark, base_rows + batch_rows, str(tmp_path / "ab.parquet"))
+    dict_path = f"{fixture_dir}/concept_dict.parquet"
+    capped = C.candidate_pairs
+    monkeypatch.setattr(C, "MAX_LSH_BLOCK", cap)
+    monkeypatch.setattr(
+        C, "candidate_pairs", lambda blocks, id_col, *_a: capped(blocks, id_col, cap)
+    )
+
+    def rows(df):
+        return sorted(map(tuple, df.select("subj", "pred", "obj", "src_url").collect()))
+
+    full = str(tmp_path / "full")
+    run_pipeline(spark, pab, dict_path, full)
+    inc = str(tmp_path / "inc")
+    run_pipeline(spark, pa, dict_path, inc)
+    info = incremental_update(spark, inc, pb, dict_path)
+    assert info["n_new_base_edges"] == 0
+    assert rows(read_triples(spark, inc)) == rows(read_triples(spark, full))
+    mapping = spark.read.parquet(f"{inc}/increments/{info['batch']}/mapping").collect()
+    assert all(r["url"] == r["canon_url"] for r in mapping)

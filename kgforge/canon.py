@@ -439,25 +439,21 @@ def _cc_distributed(edges: DataFrame, max_iter: int = 20) -> DataFrame:
 
 
 def canonicalize(
-    pages: DataFrame,
-    id_col: str = "url",
-    text_col: str = "text",
-    threshold: float = NEAR_DUP_THRESHOLD,
-    n_perms: int = MINHASH_PERMS,
-    n_bands: int = LSH_BANDS,
-    max_block: int = MAX_LSH_BLOCK,
-    info: dict | None = None,
+    pages: DataFrame, threshold: float = NEAR_DUP_THRESHOLD
 ) -> tuple[DataFrame, DataFrame]:
     """Full canonicalization: near-duplicate pages collapse to one
-    canonical subject (min url in each component). Returns
-    (mapping(url, canon_url), metrics).
+    canonical subject (min url in each component). pages(url, text,
+    sig?) -> (mapping(url, canon_url), metrics).
 
-    `info`, when passed, receives connected_components' branch decision
-    ({branch, n_edges_probed, threshold}) the moment this returns. The
-    metrics frame carries the same decision as its cc_branch and
-    cc_threshold rows next to the dropped LSH blocks; it filters the
-    checkpointed block-size table, so writing it (run_pipeline does, to
-    _metrics_canon) costs no pass over the blocks.
+    Blocking uses the stored MinHash signature `sig` (extract_pages
+    writes it with the text); a frame without one, such as a hand-built
+    (url, text) frame, gets it computed here from `text`.
+
+    The metrics frame carries connected_components' branch decision as
+    its cc_branch and cc_threshold rows next to the dropped LSH blocks;
+    it filters the checkpointed block-size table, so writing it
+    (run_pipeline does, to _metrics_canon) costs no pass over the
+    blocks.
 
     The blocking stages shuffle 8-byte xxhash64 ids ("iid") instead of
     ~50-byte url strings — 3-6x less exchange volume through the
@@ -466,47 +462,41 @@ def canonicalize(
     on iids, then two broadcast-sized joins translate back and pick the
     MIN-URL representative per component, preserving the documented
     canonical-id semantics exactly."""
-    iid = F.xxhash64(F.col(id_col)).alias("iid")
+    iid = F.xxhash64(F.col("url")).alias("iid")
     pages = pages.cache()  # consumed twice: signatures + exact verification
     # checkpoint the SIGNATURES (|corpus| x 128 longs), not the exploded
     # block table (x n_bands bigger): everything downstream re-derives
-    # from sigs with cheap column ops, and the minhash UDF never re-runs
-    udf = make_minhash_udf(n_perms)
-    sigs = pages.select(iid, udf(F.col(text_col)).alias("sig")).localCheckpoint(
-        eager=True
-    )
-    blocks = lsh_blocks(sigs, n_bands, "iid", n_perms=n_perms)
-    pairs, metrics = candidate_pairs(blocks, "iid", max_block)
+    # from sigs with cheap column ops
+    sig = F.col("sig") if "sig" in pages.columns else make_minhash_udf()(F.col("text"))
+    sigs = pages.select(iid, sig.alias("sig")).localCheckpoint(eager=True)
+    blocks = lsh_blocks(sigs, id_col="iid")
+    pairs, metrics = candidate_pairs(blocks, "iid")
     pairs = pairs.localCheckpoint(eager=True)
     # verified edges are materialized inside connected_components (one
     # localCheckpoint) before its size probe — the verification UDF runs
     # exactly once on either branch
-    pages_iid = pages.select(iid, F.col(id_col), F.col(text_col))
-    verified = verify_pairs_jaccard(pairs, pages_iid, threshold, "iid", text_col)
+    pages_iid = pages.select(iid, "url", "text")
+    verified = verify_pairs_jaccard(pairs, pages_iid, threshold, "iid")
     cc_info: dict = {}
     comps = connected_components(
         verified.select(F.col("a").alias("src"), F.col("b").alias("dst")),
         info=cc_info,
     )
-    if info is not None:
-        info.update(cc_info)
     # record which CC regime ran (and at what probed edge count /
     # threshold) alongside the capped-block metrics — run evidence for
     # the memory-derived cutover policy
-    if cc_info:
-        spark = pages.sparkSession
-        cc_rows = spark.createDataFrame(
-            [
-                ("cc_branch", cc_info["branch"], int(cc_info["n_edges_probed"] or 0)),
-                ("cc_threshold", cc_info["branch"], int(cc_info["threshold"])),
-            ],
-            "metric string, key string, value long",
-        )
-        metrics = metrics.select("metric", F.col("key").cast("string"), F.col("value").cast("long")).unionByName(cc_rows)
+    cc_rows = pages.sparkSession.createDataFrame(
+        [
+            ("cc_branch", cc_info["branch"], int(cc_info["n_edges_probed"] or 0)),
+            ("cc_threshold", cc_info["branch"], int(cc_info["threshold"])),
+        ],
+        "metric string, key string, value long",
+    )
+    metrics = metrics.select("metric", F.col("key").cast("string"), F.col("value").cast("long")).unionByName(cc_rows)
     # translate component ids back to urls; representative = min url.
     # node_urls and reps are O(pages in some near-dup component) — tiny
     # relative to the corpus — so both joins broadcast
-    purl = pages.select(F.col(id_col).alias("url"), iid)
+    purl = pages.select("url", iid)
     node_urls = purl.join(
         F.broadcast(comps.withColumnRenamed("node", "iid")), "iid"
     ).select("iid", "url", "comp")

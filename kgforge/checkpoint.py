@@ -17,20 +17,20 @@ A computed stage runs under a Spark job group named after it, and
 `jobs` is the number of Spark jobs that group ran.
 
 Reading: every directory kgforge wrote (stage outputs, crawl batches,
-the signature sidecar, the compacted base, the metrics tables) is read
-by `read_own`, which takes the schema Spark stored in the first data
-file's footer instead of running Spark's schema-inference job, so a
-resume into a finished out dir runs no Spark job at all. External
-inputs keep Spark's inference.
+the compacted base, the metrics tables) is read by `read_own`, which
+takes the schema Spark stored in the first data file's footer instead
+of running Spark's schema-inference job, so a resume into a finished
+out dir runs no Spark job at all. External inputs keep Spark's
+inference.
 
 Publishing: `publishing(path)` hands out a hidden sibling to write and
 swaps it in with two renames when the block ends; `settle(path)`
 finishes a swap a crash cut between those renames. Stage outputs,
-crawl batches, the compacted base, migrated tables and the signature
-sidecar all go through it, so each is complete or absent at every
-instant. A stage drops its manifest before it builds and writes it
-after the swap: a crash anywhere in between leaves no manifest (or a
-torn one that fails to decode), and the re-run recomputes the stage.
+crawl batches, the compacted base and migrated tables all go through
+it, so each is complete or absent at every instant. A stage drops its
+manifest before it builds and writes it after the swap: a crash
+anywhere in between leaves no manifest (or a torn one that fails to
+decode), and the re-run recomputes the stage.
 
 On a real cluster with Iceberg jars, `input_fingerprint` is the source
 snapshot id and stage outputs are Iceberg overwritePartitions; the logic

@@ -26,6 +26,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from kgforge.canon import make_minhash_udf
+
 # Boilerplate containers dropped wholesale (non-greedy, DOTALL).
 _DROP = re.compile(
     r"<(script|style|nav|footer|header|aside)\b[^>]*>.*?</\1\s*>",
@@ -63,11 +65,16 @@ def extract_text_udf(html: pd.Series) -> pd.Series:
 
 
 def extract_pages(pages: DataFrame, langs: tuple[str, ...] | None = ("en",)) -> DataFrame:
-    """pages(url, warc_ts, html, text?, lang) -> extracted pages.
+    """pages(url, warc_ts, html, text?, lang) -> extracted pages
+    (url, warc_ts, lang, text, sig).
 
     The language filter is the analog of the reference's hard visit
     date-window view (Oracle/PCORNetLoader_ora.sql:114): a predicate
     every downstream consumer inherits, pushed to the scan.
+
+    `sig` is the page's MinHash signature over `text`, stored with it:
+    canonicalization and every crawl batch block on it without
+    recomputing (a consumer that does not select it prunes the UDF).
     """
     out = pages
     if langs:
@@ -77,7 +84,7 @@ def extract_pages(pages: DataFrame, langs: tuple[str, ...] | None = ("en",)) -> 
         "warc_ts",
         "lang",
         extract_text_udf(F.col("html")).alias("text"),
-    )
+    ).withColumn("sig", make_minhash_udf()(F.col("text")))
 
 
 def extraction_checksums(pages: DataFrame) -> DataFrame:

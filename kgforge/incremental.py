@@ -8,19 +8,19 @@ Iceberg deployment would use:
 
 - New pages run the normal extract -> mentions -> link stages (batch
   scale only, never the base corpus).
-- Canonicalization delta: the base corpus contributes only its stored
-  MinHash SIGNATURES (a sidecar table built once, appended per batch) —
-  new-vs-base candidate pairs come from an LSH-block equi-join of the
-  batch's blocks against the base's, new-new pairs from the full run's
-  candidate_pairs over the batch's blocks, each capped and its dropped
-  blocks recorded in the batch's `_metrics_canon`; a block over the cap
-  only with its base members counted yields no new-new pairs either,
-  as the full run drops it whole. Both pair sets go through ONE
-  exact-Jaccard verification (the build's verify_pairs_jaccard), which
-  reads base TEXT only for the base urls in a candidate pair (left-semi
-  pruned scan of the stored `extracted` stage); its materialized edges
-  yield the anchors, the batch's connected components and the
-  new-vs-base edge count.
+- Canonicalization delta: the base corpus contributes only the MinHash
+  signatures stored with its pages (the `sig` column of the extracted
+  stage and of every committed increment's) — new-vs-base candidate
+  pairs come from an LSH-block equi-join of the batch's blocks against
+  the base's, new-new pairs from the full run's candidate_pairs over
+  the batch's blocks, each capped and its dropped blocks recorded in
+  the batch's `_metrics_canon`; a block over the cap only with its base
+  members counted yields no new-new pairs either, as the full run drops
+  it whole. Both pair sets go through ONE exact-Jaccard verification
+  (the build's verify_pairs_jaccard), which reads base TEXT only for
+  the base urls in a candidate pair (left-semi pruned scan of the
+  stored `extracted` stage); its materialized edges yield the anchors,
+  the batch's connected components and the new-vs-base edge count.
 - Representative STABILITY: a new page near-duplicating a base page
   adopts the base component's canonical subject — base triples are
   never re-keyed. A batch component whose members collectively verify
@@ -29,7 +29,7 @@ Iceberg deployment would use:
   component) bridges base components: it is counted
   (`deferred_base_merges`) and keeps the min anchor for its own rows.
   Re-keying the base is deferred to the NEXT FULL RUN — compact()
-  materializes the merge-on-read view and folds stage sidecars but
+  materializes the merge-on-read view and folds the batches' stages but
   deliberately does not re-key existing subjects.
 - Spans come from the build's own aggregation (emit.span_triples), fed
   the batch's page observations plus each touched subject's stored
@@ -46,14 +46,18 @@ Iceberg deployment would use:
   (merge-on-read); compact() materializes that view as the new base
   (compaction) and clears increments.
 - Every directory this module creates or replaces (batch dirs, the
-  signature sidecar, the compacted base, the cleared increments) is
-  published through checkpoint.publishing, so a crash leaves each one
-  complete or absent; the readers settle a swap a crash cut short.
+  compacted base, the cleared increments) is published through
+  checkpoint.publishing, so a crash leaves each one complete or absent;
+  the readers settle a swap a crash cut short. A batch's signatures
+  are published with it, in its `extracted`.
+- A batch's Spark jobs all run inside its stages' job groups: the
+  canonicalization delta and its `_metrics_canon` record inside the
+  `mapping` build, the dictionary prep inside the `triples` build.
 - Every directory this module reads back (base stages, committed
-  increments, the signature sidecar, the merge-on-read view) is read
-  through checkpoint.read_own, which takes its schema from the parquet
-  footer Spark wrote and so runs no schema-inference job; only the new
-  pages and the dictionary, external inputs, are inferred.
+  increments, the merge-on-read view) is read through
+  checkpoint.read_own, which takes its schema from the parquet footer
+  Spark wrote and so runs no schema-inference job; only the new pages
+  and the dictionary, external inputs, are inferred.
 """
 
 from __future__ import annotations
@@ -111,18 +115,6 @@ def read_committed(
     )
     paths = [os.path.join(out_dir, base), *filter(os.path.isdir, incs)]
     return read_own(spark, *paths).select(*cols)
-
-
-def _ensure_signature_sidecar(spark: SparkSession, out_dir: str) -> str:
-    """signatures/(url, sig array<long>) — built once from the stored
-    extracted stage, appended per batch. The ONLY base-corpus-wide work
-    incremental ever does, and only on the first increment."""
-    sig_path = os.path.join(out_dir, "signatures")
-    if not os.path.isdir(sig_path):
-        base_ext = read_own(spark, os.path.join(out_dir, "extracted"))
-        with publishing(sig_path) as tmp:
-            C.minhash_signatures(base_ext, "text", "url").write.parquet(tmp)
-    return sig_path
 
 
 def _capped_block_join(
@@ -212,165 +204,146 @@ def incremental_update(
     # point. _increment_dirs only matches ^batch-\d{5}$, so a
     # half-written batch from a crashed run is invisible to read_triples
     # and wiped by the retry — no partial batch can ever enter the
-    # merge-on-read view. The signature append is the
-    # last step before the swap (a batch must never be visible without
-    # its sigs); a crash between the two leaves orphaned sidecar rows,
-    # which the guard on base_sigs below absorbs.
+    # merge-on-read view.
     batch = _next_batch(out_dir)
     with publishing(os.path.join(out_dir, "increments", batch)) as tmp_dir:
         cp = CheckpointManager(spark, tmp_dir, batch)
         # canonical mapping = base stage PLUS every prior increment's mapping,
-        # so a batch can anchor to pages introduced by earlier batches (their
-        # signatures are already in the sidecar); extracted text likewise, so
-        # exact verification can read a prior batch's page text
+        # so a batch can anchor to pages introduced by earlier batches;
+        # extracted text and signatures likewise, so the block join and
+        # exact verification see a prior batch's pages
         base_mapping = read_committed(
             spark, out_dir, "canon_mapping", "mapping", ["url", "canon_url"]
         )
-        base_ext = read_committed(spark, out_dir, "extracted", "extracted", ["url", "text"])
-        sig_path = _ensure_signature_sidecar(spark, out_dir)
-        # dropDuplicates: a crash between the sidecar append and the batch
-        # rename re-appends the same (url, sig) rows on retry; signatures
-        # are deterministic per url so keeping any one copy is exact.
-        # The left-semi against the committed mappings (base + every visible
-        # increment — both carry identity rows for ALL their urls) drops
-        # ORPHANED sidecar rows from a crash in the append-then-rename
-        # window: without it, the crashed batch's own urls sit on the BASE
-        # side of the block join on retry and the resulting self/new-new
-        # pairs inflate n_new_base_edges / n_capped_blocks (the mapping was
-        # always safe — orphans miss base_mapping — but metrics lied).
-        base_sigs = (
-            read_own(spark, sig_path)
-            .dropDuplicates(["url"])
-            .join(base_mapping.select("url"), "url", "left_semi")
+        base_ext = read_committed(
+            spark, out_dir, "extracted", "extracted", ["url", "text", "sig"]
         )
-
-        dic, aliases = O.linker_inputs(spark.read.parquet(dict_path))
         ext = cp.run_stage(
             "extracted",
             lambda: extract_pages(spark.read.parquet(new_pages_path), langs),
         )
-        cands = link_mentions(detect_mentions(ext, aliases), dic).cache()
+        counts: dict = {}
 
-        # --- canonicalization delta -----------------------------------------
-        new_sigs = C.minhash_signatures(ext, "text", "url").localCheckpoint(eager=True)
-        new_blocks = C.lsh_blocks(new_sigs, id_col="url")
-        # Constant-size prefilter for the base side of the block join: a
-        # Bloom bitmap over the BATCH's band keys (the small side) drops
-        # base blocks whose key definitely has no partner, before the
-        # base-side groupBy shuffle — at corpus scale the base block table
-        # dwarfs the batch's, and most of its keys have no match. Exactly
-        # output-preserving: _capped_block_join is inner on bk on both the
-        # sizes and pairs paths, the per-bk prune keeps surviving blocks
-        # whole (the probe key IS bk), and false positives merely ride
-        # through to the join that was already going to discard them
-        # (pytest asserts run parity with the prune disabled).
-        nb_bloom = B.bloom_build(new_blocks.select("bk"), B.h64_xx(F.col("bk")))
-        base_blocks = B.bloom_prune(
-            C.lsh_blocks(base_sigs, id_col="url"), B.h64_xx(F.col("bk")), nb_bloom
-        )
-        nb_pairs, nn_blocks, nb_dropped = _capped_block_join(
-            new_blocks, base_blocks, C.MAX_LSH_BLOCK
-        )
-        nn_pairs, nn_dropped = C.candidate_pairs(nn_blocks, id_col="url")
-        # column a is always the batch url, and batch urls are new, so the
-        # new-vs-base and new-new pair sets are disjoint
-        pairs = nb_pairs.unionByName(nn_pairs).localCheckpoint(eager=True)
-
-        # one exact verification: batch text + ONLY the base urls that
-        # appear in a candidate pair (left-semi pruned scan of the stored
-        # stage); the edges are consumed by the anchors, the batch
-        # components and the edge count
-        texts = ext.select("url", "text").unionByName(
-            base_ext.join(pairs.select(F.col("b").alias("url")), "url", "left_semi")
-        )
-        edges = C.verify_pairs_jaccard(pairs, texts, threshold).localCheckpoint(
-            eager=True
-        )
-
-        # (new url, base canonical) anchoring edges — a new-new edge's b has
-        # no base mapping row; per-url min anchor drives the mapping below
-        nb_edges = edges.join(
-            base_mapping.select(F.col("url").alias("b"), "canon_url"), "b"
-        ).select(F.col("a").alias("url"), "canon_url")
-        url_anchor = nb_edges.distinct()
-        anchors = url_anchor.groupBy("url").agg(F.min("canon_url").alias("anchor"))
-
-        # components among the batch (new-new edges only: a base url inside
-        # a component would change which canonical a bridging component
-        # adopts), then adopt the min anchor per component
-        nn_edges = edges.join(ext.select(F.col("url").alias("b")), "b", "left_semi")
-        comps = C.connected_components(
-            nn_edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        )
-        node_comp = (
-            ext.select("url")
-            .join(
-                F.broadcast(comps.withColumnRenamed("node", "url")), "url", "left"
+        def canon_delta() -> DataFrame:
+            new_blocks = C.lsh_blocks(ext, id_col="url")
+            # Constant-size prefilter for the base side of the block join: a
+            # Bloom bitmap over the BATCH's band keys (the small side) drops
+            # base blocks whose key definitely has no partner, before the
+            # base-side groupBy shuffle — at corpus scale the base block table
+            # dwarfs the batch's, and most of its keys have no match. Exactly
+            # output-preserving: _capped_block_join is inner on bk on both the
+            # sizes and pairs paths, the per-bk prune keeps surviving blocks
+            # whole (the probe key IS bk), and false positives merely ride
+            # through to the join that was already going to discard them
+            # (pytest asserts run parity with the prune disabled).
+            nb_bloom = B.bloom_build(new_blocks.select("bk"), B.h64_xx(F.col("bk")))
+            base_blocks = B.bloom_prune(
+                C.lsh_blocks(base_ext, id_col="url"), B.h64_xx(F.col("bk")), nb_bloom
             )
-            .select("url", F.coalesce("comp", F.col("url")).alias("comp"))
-        )
-        comp_anchor = (
-            node_comp.join(anchors, "url", "left")
-            .groupBy("comp")
-            .agg(F.min("anchor").alias("comp_anchor"), F.min("url").alias("comp_min"))
-        )
-        deferred = deferred_merge_count(node_comp, url_anchor)
-        mapping_new = cp.run_stage(
-            "mapping",
-            lambda: node_comp.join(F.broadcast(comp_anchor), "comp").select(
-                "url",
-                F.coalesce("comp_anchor", "comp_min").alias("canon_url"),
-            ),
-        )
+            nb_pairs, nn_blocks, nb_dropped = _capped_block_join(
+                new_blocks, base_blocks, C.MAX_LSH_BLOCK
+            )
+            nn_pairs, nn_dropped = C.candidate_pairs(nn_blocks, id_col="url")
+            # column a is always the batch url, and batch urls are new, so the
+            # new-vs-base and new-new pair sets are disjoint
+            pairs = nb_pairs.unionByName(nn_pairs).localCheckpoint(eager=True)
 
-        # --- emission --------------------------------------------------------
-        # the full run's emitters, with their observed spans replaced by
-        # the build's span aggregation over the batch's observations plus
-        # each touched subject's stored observed ('E') span as two
-        # observations (its start and its end, from its source url);
-        # subjects with a curated ('A') stored span keep it
-        sparse = mapping_new.filter(F.col("url") != F.col("canon_url"))
-        new_obs = E.span_observations(ext, sparse)
-        stored = read_triples(spark, out_dir).filter(F.col("pred") == "hasSpan")
-        touched = stored.join(new_obs.select("subj"), "subj", "left_semi")
-        observed = touched.filter(F.col("qual_kind") == "E").select(
-            "subj",
-            F.col("src_url").alias("url"),
-            F.explode(
-                F.array(
-                    F.to_timestamp(F.split("obj", "/").getItem(0), E.ISO_FMT),
-                    F.col("src_ts"),
+            # one exact verification: batch text + ONLY the base urls that
+            # appear in a candidate pair (left-semi pruned scan of the stored
+            # stage); the edges are consumed by the anchors, the batch
+            # components and the edge count
+            texts = ext.select("url", "text").unionByName(
+                base_ext.select("url", "text").join(
+                    pairs.select(F.col("b").alias("url")), "url", "left_semi"
                 )
-            ).alias("warc_ts"),
-        )
-        curated = touched.filter(F.col("qual_kind") == "A").select("subj")
-        span_rows = E.span_triples(
-            new_obs.join(curated, "subj", "left_anti").unionByName(observed)
-        )
-        cp.run_stage(
-            "triples",
-            lambda: E.all_triples(ext, cands, mapping_new)
-            .filter(F.col("pred") != "hasSpan")
-            .distinct()
-            .unionByName(span_rows),
-            partition_by=["pred"],
-        )
-        # the capped blocks of both block joins, recorded with the batch
-        # (no silent caps) and counted from the written file's footer
-        write_metrics(
-            nb_dropped.unionByName(nn_dropped), tmp_dir, batch, name="_metrics_canon"
-        )
+            )
+            edges = C.verify_pairs_jaccard(pairs, texts, threshold).localCheckpoint(
+                eager=True
+            )
+
+            # (new url, base canonical) anchoring edges — a new-new edge's b
+            # has no base mapping row; per-url min anchor drives the mapping
+            nb_edges = edges.join(
+                base_mapping.select(F.col("url").alias("b"), "canon_url"), "b"
+            ).select(F.col("a").alias("url"), "canon_url")
+            url_anchor = nb_edges.distinct()
+            anchors = url_anchor.groupBy("url").agg(F.min("canon_url").alias("anchor"))
+
+            # components among the batch (new-new edges only: a base url
+            # inside a component would change which canonical a bridging
+            # component adopts), then adopt the min anchor per component
+            nn_edges = edges.join(ext.select(F.col("url").alias("b")), "b", "left_semi")
+            comps = C.connected_components(
+                nn_edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
+            )
+            node_comp = (
+                ext.select("url")
+                .join(
+                    F.broadcast(comps.withColumnRenamed("node", "url")), "url", "left"
+                )
+                .select("url", F.coalesce("comp", F.col("url")).alias("comp"))
+            )
+            comp_anchor = (
+                node_comp.join(anchors, "url", "left")
+                .groupBy("comp")
+                .agg(F.min("anchor").alias("comp_anchor"), F.min("url").alias("comp_min"))
+            )
+            counts["n_new_base_edges"] = nb_edges.count()
+            counts["deferred_base_merges"] = deferred_merge_count(node_comp, url_anchor)
+            # the capped blocks of both block joins, recorded with the batch
+            # (no silent caps) and counted from the written file's footer
+            write_metrics(
+                nb_dropped.unionByName(nn_dropped), tmp_dir, batch, name="_metrics_canon"
+            )
+            return node_comp.join(F.broadcast(comp_anchor), "comp").select(
+                "url", F.coalesce("comp_anchor", "comp_min").alias("canon_url")
+            )
+
+        mapping_new = cp.run_stage("mapping", canon_delta)
+
+        def emission() -> DataFrame:
+            # the full run's emitters, with their observed spans replaced by
+            # the build's span aggregation over the batch's observations plus
+            # each touched subject's stored observed ('E') span as two
+            # observations (its start and its end, from its source url);
+            # subjects with a curated ('A') stored span keep it
+            dic, aliases = O.linker_inputs(spark.read.parquet(dict_path))
+            cands = link_mentions(detect_mentions(ext, aliases), dic).cache()
+            sparse = mapping_new.filter(F.col("url") != F.col("canon_url"))
+            new_obs = E.span_observations(ext, sparse)
+            stored = read_triples(spark, out_dir).filter(F.col("pred") == "hasSpan")
+            touched = stored.join(new_obs.select("subj"), "subj", "left_semi")
+            observed = touched.filter(F.col("qual_kind") == "E").select(
+                "subj",
+                F.col("src_url").alias("url"),
+                F.explode(
+                    F.array(
+                        F.to_timestamp(F.split("obj", "/").getItem(0), E.ISO_FMT),
+                        F.col("src_ts"),
+                    )
+                ).alias("warc_ts"),
+            )
+            curated = touched.filter(F.col("qual_kind") == "A").select("subj")
+            span_rows = E.span_triples(
+                new_obs.join(curated, "subj", "left_anti").unionByName(observed)
+            )
+            return (
+                E.all_triples(ext, cands, mapping_new)
+                .filter(F.col("pred") != "hasSpan")
+                .distinct()
+                .unionByName(span_rows)
+            )
+
+        cp.run_stage("triples", emission, partition_by=["pred"])
         rows = {r.stage: r.rows_out for r in cp.results}
         out = {
             "batch": batch,
             "n_new_pages": rows["extracted"],
             "n_delta_triples": rows["triples"],
-            "n_new_base_edges": nb_edges.count(),
-            "deferred_base_merges": deferred,
+            **counts,
             "n_capped_blocks": _footer_row_count(os.path.join(tmp_dir, "_metrics_canon")),
             "compacted": False,
         }
-        new_sigs.write.mode("append").parquet(sig_path)
     # auto-compaction: unbounded increment lists grow the merge-on-read
     # plan linearly (one union branch + dedup input per batch) — the
     # rewrite_data_files discipline, triggered automatically

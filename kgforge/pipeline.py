@@ -65,7 +65,9 @@ def run_pipeline(
     fp_pages = fingerprint_input(pages_path)
     fp_dict = fingerprint_input(dict_path)
     fp_periods = fingerprint_input(periods_path) if periods_path else "none"
-    fp_extract = f"{fp_pages}|langs={','.join(langs) if langs else '*'}"
+    # `layout` names the extracted columns: an out dir written before
+    # `sig` was stored recomputes instead of resuming without it
+    fp_extract = f"{fp_pages}|langs={','.join(langs) if langs else '*'}|layout=sig"
     fp_mentions = f"{fp_extract}|dict={fp_dict}"
     fp_canon = f"{fp_extract}|thr={threshold}"
     fp_triples = f"{fp_mentions}|thr={threshold}|periods={fp_periods}"

@@ -360,21 +360,18 @@ def test_incremental_equals_full_refresh_modulo_reps(
     assert full == inc
 
 
-def test_orphaned_sidecar_rows_do_not_inflate_metrics(
+def test_crashed_batch_dir_does_not_inflate_metrics(
     spark, fixture_dir, tmp_path_factory
 ):
-    """Crash-window regression (round-4 ADVICE): a crash BETWEEN the
-    signature-sidecar append and the atomic batch rename leaves the
-    batch's sigs in the sidecar with no committed batch. On retry those
-    orphaned rows used to appear on the BASE side of the new-vs-base
-    block join, so the batch's own pages generated self/new-new pairs
-    that inflated n_new_base_edges and n_capped_blocks. The left-semi
-    against committed mappings must exclude them entirely."""
+    """Crash-window regression (round-4 ADVICE): a crash before the
+    atomic batch rename leaves the batch's extracted pages (and their
+    signatures) in the hidden batch dir with no committed batch. On
+    retry they must not appear on the BASE side of the new-vs-base
+    block join, where the batch's own pages would generate self/new-new
+    pairs that inflate n_new_base_edges and n_capped_blocks."""
     import datetime as dt
 
-    from kgforge import canon as C
     from kgforge.extract import extract_pages
-    from kgforge.incremental import _ensure_signature_sidecar
 
     d = tmp_path_factory.mktemp("incr_crash")
     out = str(d / "base")
@@ -396,16 +393,15 @@ def test_orphaned_sidecar_rows_do_not_inflate_metrics(
         rows, "url string, warc_ts timestamp, html binary, text string, lang string"
     ).write.parquet(p)
 
-    # simulate the crashed first attempt: sidecar append happened, the
-    # batch dir rename did not
-    sig_path = _ensure_signature_sidecar(spark, out)
+    # simulate the crashed first attempt: the batch's extracted stage is
+    # written, the batch dir rename did not happen
     ext = extract_pages(spark.read.parquet(p), ("en",))
-    C.minhash_signatures(ext, "text", "url").write.mode("append").parquet(sig_path)
+    ext.write.parquet(f"{out}/increments/.batch-00001.tmp/extracted")
 
     info = incremental_update(spark, out, p, dict_path)
     # the batch's own pages must NOT count as new-vs-base edges: their
-    # only near-dups are each other (batch-internal) and the orphaned
-    # sidecar copies of themselves
+    # only near-dups are each other (batch-internal) and the crashed
+    # attempt's copies of themselves
     assert info["n_new_base_edges"] == 0
     assert info["n_capped_blocks"] == 0
     # the pair still collapses batch-internally to one canonical subject

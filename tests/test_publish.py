@@ -3,8 +3,8 @@ through checkpoint.publishing, so a crash at any commit step leaves each
 published artifact complete or absent, and a retry reaches the result of
 an uninterrupted call.
 
-A commit step is each os.rename / os.replace under the out dir, each
-stage-manifest write and the signature-sidecar append. The fault
+A commit step is each os.rename / os.replace under the out dir and each
+stage-manifest write. The fault
 injection raises before the N-th of them, for every N up to the number
 an uninterrupted call takes."""
 
@@ -18,11 +18,10 @@ import re
 import shutil
 
 import pytest
-from pyspark.sql import DataFrameWriter
 from pyspark.sql import functions as F
 
 import kgforge.checkpoint
-from kgforge import canon as C
+import kgforge.incremental
 from kgforge.incremental import compact, incremental_update, read_triples
 from kgforge.migrate import migrate_triples, table_version
 from kgforge.pipeline import run_pipeline
@@ -59,7 +58,7 @@ def commit_steps(monkeypatch, root, crash=0, snapshots=None):
     copy `root` to snapshots/<count> after each step, so a later run can
     start from any state the uninterrupted call passed through."""
     steps = []
-    rename, replace, dump, parquet = os.rename, os.replace, json.dump, DataFrameWriter.parquet
+    rename, replace, dump = os.rename, os.replace, json.dump
 
     @contextlib.contextmanager
     def step(kind, path):
@@ -88,17 +87,10 @@ def commit_steps(monkeypatch, root, crash=0, snapshots=None):
             dump(obj, f, *a, **k)
             f.flush()
 
-    def _parquet(self, path, *a, **k):
-        if os.path.basename(path) != "signatures":
-            return parquet(self, path, *a, **k)
-        with step("sidecar", path):
-            parquet(self, path, *a, **k)
-
     with monkeypatch.context() as mp:
         mp.setattr(os, "rename", _rename)
         mp.setattr(os, "replace", _replace)
         mp.setattr(json, "dump", _dump)
-        mp.setattr(DataFrameWriter, "parquet", _parquet)
         yield steps
 
 
@@ -224,7 +216,7 @@ def test_increment_and_compaction_crash_at_every_commit_step(
     clean, want, steps, snaps = merged
     assert want["compacted"] and want["n_new_base_edges"] >= 1
     committed = steps.index(("rename", "increments/batch-00001")) + 1
-    assert ("sidecar", "signatures") in steps[:committed]
+    assert not any("signatures" in path for _kind, path in steps), steps
     assert len(steps) > committed + 3, steps  # fold, publish, withdraw
     base_view = _rows(read_triples(spark, base_out))
     want_view = _rows(read_triples(spark, clean))
@@ -278,25 +270,27 @@ def test_migration_crash_at_every_commit_step(spark, tmp_path, monkeypatch):
         assert os.listdir(root) == ["triples"]
 
 
-def test_failed_first_sidecar_build_is_retried(
+def test_failed_batch_signature_job_is_retried(
     spark, fixture_dir, pages, base_out, merged, tmp_path, monkeypatch
 ):
-    """A first increment whose signature-sidecar job fails leaves no
-    sidecar behind: the retry builds it and returns the same counts and
-    view as an uninterrupted increment."""
+    """An increment whose extraction/signature job fails leaves no batch
+    and no hidden dir behind: the retry returns the same counts and view
+    as an uninterrupted increment."""
     clean, want, _steps, _snaps = merged
     out = str(tmp_path / "out")
     shutil.copytree(base_out, out)
-    sigs = C.minhash_signatures
+    extract = kgforge.incremental.extract_pages
 
-    def failing(df, *a, **k):
-        return sigs(df, *a, **k).filter(F.raise_error("injected").isNull())
+    def failing(*a, **k):
+        ext = extract(*a, **k)
+        return ext.withColumn("sig", F.when(F.raise_error("injected").isNull(), ext["sig"]))
 
     with monkeypatch.context() as mp:
-        mp.setattr(C, "minhash_signatures", failing)
+        mp.setattr(kgforge.incremental, "extract_pages", failing)
         with pytest.raises(Exception, match="injected"):
             _merge(spark, fixture_dir, pages, out)
-    assert not os.path.exists(f"{out}/signatures")
+    assert not os.path.exists(f"{out}/increments") or not os.listdir(f"{out}/increments")
+    _assert_clean(spark, out)
     assert _merge(spark, fixture_dir, pages, out) == want
     assert _rows(read_triples(spark, out)) == _rows(read_triples(spark, clean))
 

@@ -106,7 +106,6 @@ def test_footer_schema_equals_inferred_for_every_written_dir(
     for d in (
         *(os.path.join(out, s) for s in STAGES),
         *(os.path.join(inc, s) for s in ("extracted", "mapping", "triples")),
-        os.path.join(out, "signatures"),
         os.path.join(out, "_metrics"),
         os.path.join(out, "_metrics_canon"),
     ):

@@ -10,17 +10,19 @@ Iceberg deployment would use:
   scale only, never the base corpus).
 - Canonicalization delta: the base corpus contributes only the MinHash
   signatures stored with its pages (the `sig` column of the extracted
-  stage and of every committed increment's) — new-vs-base candidate
-  pairs come from an LSH-block equi-join of the batch's blocks against
-  the base's, new-new pairs from the full run's candidate_pairs over
-  the batch's blocks, each capped and its dropped blocks recorded in
-  the batch's `_metrics_canon`; a block over the cap only with its base
-  members counted yields no new-new pairs either, as the full run drops
-  it whole. Both pair sets go through ONE exact-Jaccard verification
-  (the build's verify_pairs_jaccard), which reads base TEXT only for
-  the base urls in a candidate pair (left-semi pruned scan of the
-  stored `extracted` stage); its materialized edges yield the anchors,
-  the batch's connected components and the new-vs-base edge count.
+  stage and of every committed increment's). The batch's LSH blocks and
+  the base blocks that share their keys (Bloom-pruned, then restricted
+  exactly by a left-semi join on the block key) go through the full
+  run's candidate_pairs ONCE, so a block is capped on its combined
+  base + batch size and its dropped-block row in the batch's
+  `_metrics_canon` is the one a full run records. Pairs of two base
+  urls were resolved by the base and are dropped; the rest, oriented
+  batch url first, go through ONE exact-Jaccard verification (the
+  build's verify_pairs_jaccard), which reads base TEXT only for the
+  base urls in a candidate pair (left-semi pruned scan of the stored
+  `extracted` stage); its materialized edges yield the anchors, the
+  batch's connected components and the new-vs-base edge count, which
+  the same `_metrics_canon` write records with `deferred_base_merges`.
 - Representative STABILITY: a new page near-duplicating a base page
   adopts the base component's canonical subject — base triples are
   never re-keyed. A batch component whose members collectively verify
@@ -66,6 +68,7 @@ import glob
 import os
 import re
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -83,7 +86,7 @@ from kgforge.checkpoint import (
 from kgforge.conf import NEAR_DUP_THRESHOLD
 from kgforge.extract import extract_pages
 from kgforge.link import link_mentions
-from kgforge.metrics import write_metrics
+from kgforge.metrics import metrics_file, write_metrics
 from kgforge.mentions import detect_mentions
 from kgforge.operators import bloom as B
 
@@ -117,76 +120,32 @@ def read_committed(
     return read_own(spark, *paths).select(*cols)
 
 
-def _capped_block_join(
-    new_blocks: DataFrame, base_blocks: DataFrame, max_block: int
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(new url a) x (base url b) pairs sharing an LSH block, hub blocks
-    capped AND counted (no-silent-caps, SURVEY.md §7.5). Returns (pairs,
-    the batch blocks left for the new-new pairs, dropped blocks).
-
-    The cap is on the COMBINED block size (n_new + n_base <= max_block),
-    as the full run's candidate_pairs caps a block of the whole corpus.
-    A block over the cap only in combination leaves the batch's blocks
-    too, so it yields no new-new pairs either, as in a full run; a block
-    over the cap on the batch's side alone stays, and candidate_pairs
-    drops and records it."""
-    sn = new_blocks.groupBy("bk").agg(F.count(F.lit(1)).alias("n_new"))
-    sb = base_blocks.groupBy("bk").agg(F.count(F.lit(1)).alias("n_base"))
-    # only blocks present on BOTH sides matter; materialized once, so the
-    # pairs join and the dropped-block count do not each re-aggregate the
-    # base block table
-    sizes = sn.join(sb, "bk").localCheckpoint(eager=True)
-    keep = sizes.filter(
-        (F.col("n_new") + F.col("n_base")) <= max_block
-    ).select("bk")
-    over = sizes.filter((F.col("n_new") + F.col("n_base")) > max_block)
-    nn_blocks = new_blocks.join(
-        F.broadcast(over.filter(F.col("n_new") <= max_block).select("bk")),
-        "bk",
-        "left_anti",
+def _count_row(df: DataFrame, metric: str) -> DataFrame:
+    """One `_metrics_canon` row (metric, null key, value) holding the
+    row count of `df`, computed when the frame is written."""
+    return df.agg(F.count(F.lit(1)).alias("value")).select(
+        F.lit(metric).alias("metric"), F.lit(None).cast("string").alias("key"), "value"
     )
-    dropped = over.select(
-        F.lit("incr_block_dropped").alias("metric"),
-        F.col("bk").cast("string").alias("key"),
-        # pairs avoided; multiply in double, then clamp to the largest
-        # double below 2^63 BEFORE the long cast — under Spark 4.x's
-        # ANSI-on default an overflowing cast throws CAST_OVERFLOW (with
-        # ANSI off it would clamp silently), so a degenerate ~3e9-a-side
-        # hub block must saturate explicitly rather than error the job
-        F.least(
-            F.col("n_new").cast("double") * F.col("n_base"),
-            F.lit(float((1 << 63) - 1024)),
-        )
-        .cast("long")
-        .alias("value"),
-    )
-    pairs = (
-        new_blocks.join(F.broadcast(keep), "bk")
-        .select("bk", F.col("url").alias("a"))
-        .join(base_blocks.select("bk", F.col("url").alias("b")), "bk")
-        .select("a", "b")
-        .distinct()
-    )
-    return pairs, nn_blocks, dropped
 
 
-def deferred_merge_count(node_comp: DataFrame, url_anchor: DataFrame) -> int:
+def deferred_merge_count(node_comp: DataFrame, url_anchor: DataFrame) -> DataFrame:
     """Batch components that bridge base components: a component whose
     members collectively anchor to MORE THAN ONE distinct base canonical
     is a deferred base merge. Counting distinct canonicals per component
     covers both the one-url-multi-anchor case and the A~B bridge case
     (A anchors base1, B anchors base2 — invisible to a per-url count).
+    Returns the count as a one-row `deferred_base_merges` metrics frame.
 
     node_comp: (url, comp) — every batch url with its batch component id
     url_anchor: (url, canon_url) — distinct verified anchoring pairs
     """
-    return (
+    bridges = (
         node_comp.join(url_anchor, "url")
         .groupBy("comp")
         .agg(F.countDistinct("canon_url").alias("n_dist"))
         .filter(F.col("n_dist") > 1)
-        .count()
     )
+    return _count_row(bridges, "deferred_base_merges")
 
 
 def incremental_update(
@@ -222,31 +181,45 @@ def incremental_update(
             "extracted",
             lambda: extract_pages(spark.read.parquet(new_pages_path), langs),
         )
-        counts: dict = {}
 
         def canon_delta() -> DataFrame:
             new_blocks = C.lsh_blocks(ext, id_col="url")
             # Constant-size prefilter for the base side of the block join: a
             # Bloom bitmap over the BATCH's band keys (the small side) drops
             # base blocks whose key definitely has no partner, before the
-            # base-side groupBy shuffle — at corpus scale the base block table
+            # semi-join's shuffle — at corpus scale the base block table
             # dwarfs the batch's, and most of its keys have no match. Exactly
-            # output-preserving: _capped_block_join is inner on bk on both the
-            # sizes and pairs paths, the per-bk prune keeps surviving blocks
-            # whole (the probe key IS bk), and false positives merely ride
-            # through to the join that was already going to discard them
-            # (pytest asserts run parity with the prune disabled).
+            # output-preserving: the per-bk prune keeps surviving blocks whole
+            # (the probe key IS bk), and false positives merely ride through
+            # to the exact left-semi join on bk, which discards them before
+            # candidate_pairs sees (and would record as capped) a base-only
+            # block (pytest asserts run parity with the prune disabled).
             nb_bloom = B.bloom_build(new_blocks.select("bk"), B.h64_xx(F.col("bk")))
             base_blocks = B.bloom_prune(
                 C.lsh_blocks(base_ext, id_col="url"), B.h64_xx(F.col("bk")), nb_bloom
+            ).join(new_blocks.select("bk"), "bk", "left_semi")
+            # the build's block path over every block holding a batch page,
+            # base members included, so the cap and its record are the full
+            # run's: a block over MAX_LSH_BLOCK yields no pairs and one
+            # lsh_block_dropped row valued at its combined size
+            pairs, dropped = C.candidate_pairs(
+                new_blocks.unionByName(base_blocks), id_col="url"
             )
-            nb_pairs, nn_blocks, nb_dropped = _capped_block_join(
-                new_blocks, base_blocks, C.MAX_LSH_BLOCK
+            # a pair of two base urls was resolved by the base; every other
+            # pair is oriented so that column a is a batch url (a new-new
+            # pair keeps a < b)
+            is_new = ext.select("url", F.lit(True).alias("new"))
+            swap = F.col("a_new").isNull()
+            pairs = (
+                pairs.join(is_new.toDF("a", "a_new"), "a", "left")
+                .join(is_new.toDF("b", "b_new"), "b", "left")
+                .filter(F.col("a_new") | F.col("b_new"))
+                .select(
+                    F.when(swap, F.col("b")).otherwise(F.col("a")).alias("a"),
+                    F.when(swap, F.col("a")).otherwise(F.col("b")).alias("b"),
+                )
+                .localCheckpoint(eager=True)
             )
-            nn_pairs, nn_dropped = C.candidate_pairs(nn_blocks, id_col="url")
-            # column a is always the batch url, and batch urls are new, so the
-            # new-vs-base and new-new pair sets are disjoint
-            pairs = nb_pairs.unionByName(nn_pairs).localCheckpoint(eager=True)
 
             # one exact verification: batch text + ONLY the base urls that
             # appear in a candidate pair (left-semi pruned scan of the stored
@@ -288,12 +261,12 @@ def incremental_update(
                 .groupBy("comp")
                 .agg(F.min("anchor").alias("comp_anchor"), F.min("url").alias("comp_min"))
             )
-            counts["n_new_base_edges"] = nb_edges.count()
-            counts["deferred_base_merges"] = deferred_merge_count(node_comp, url_anchor)
-            # the capped blocks of both block joins, recorded with the batch
-            # (no silent caps) and counted from the written file's footer
+            # the capped blocks (no silent caps) and the batch's two counts,
+            # computed by the write itself and read back without Spark
             write_metrics(
-                nb_dropped.unionByName(nn_dropped), tmp_dir, batch, name="_metrics_canon"
+                dropped.unionByName(_count_row(nb_edges, "n_new_base_edges"))
+                .unionByName(deferred_merge_count(node_comp, url_anchor)),
+                tmp_dir, batch, name="_metrics_canon",
             )
             return node_comp.join(F.broadcast(comp_anchor), "comp").select(
                 "url", F.coalesce("comp_anchor", "comp_min").alias("canon_url")
@@ -336,12 +309,13 @@ def incremental_update(
 
         cp.run_stage("triples", emission, partition_by=["pred"])
         rows = {r.stage: r.rows_out for r in cp.results}
+        recorded = pq.read_table(metrics_file(tmp_dir, batch, "_metrics_canon")).to_pylist()
         out = {
             "batch": batch,
             "n_new_pages": rows["extracted"],
             "n_delta_triples": rows["triples"],
-            **counts,
-            "n_capped_blocks": _footer_row_count(os.path.join(tmp_dir, "_metrics_canon")),
+            **{r["metric"]: r["value"] for r in recorded if r["key"] is None},
+            "n_capped_blocks": sum(r["metric"] == "lsh_block_dropped" for r in recorded),
             "compacted": False,
         }
     # auto-compaction: unbounded increment lists grow the merge-on-read

@@ -118,9 +118,11 @@ def test_batch_span_equals_the_build_span(spark, merged):
 
 def test_batch_records_capped_blocks(spark, fixture_dir, base, tmp_path, monkeypatch):
     """No silent caps on the batch path: with the block cap below the
-    batch's block size, the dropped new-vs-base and new-new blocks both
-    reach the batch's _metrics_canon, and n_capped_blocks is its row
-    count (the test_pipeline_records_capped_blocks pattern)."""
+    batch's block size, every dropped block reaches the batch's
+    _metrics_canon once, valued at its combined size (the batch's clones
+    plus the base pages in the block, as a full run records it), and
+    n_capped_blocks is the number of those rows (the
+    test_pipeline_records_capped_blocks pattern)."""
     src, first = base
     out = str(tmp_path / "out")
     shutil.copytree(src, out)
@@ -139,11 +141,16 @@ def test_batch_records_capped_blocks(spark, fixture_dir, base, tmp_path, monkeyp
     by_metric = {}
     for r in rows:
         by_metric.setdefault(r["metric"], []).append(r["value"])
-    assert info["n_capped_blocks"] == len(rows) == 64  # 32 bands, both joins
-    assert by_metric["lsh_block_dropped"] == [n] * 32
-    # pairs avoided: n batch pages x the base pages in the block
-    assert len(by_metric["incr_block_dropped"]) == 32
-    assert all(v >= n and v % n == 0 for v in by_metric["incr_block_dropped"])
+    assert info["n_capped_blocks"] == len(by_metric["lsh_block_dropped"]) == 32  # one per band
+    assert set(by_metric) == {"lsh_block_dropped", "n_new_base_edges", "deferred_base_merges"}
+    # each valued at its combined size: the n clones plus the base pages
+    # in the block (the cloned page and a near-duplicate of it)
+    dropped = {r["key"]: r["value"] for r in rows if r["metric"] == "lsh_block_dropped"}
+    base_blocks = C.lsh_blocks(spark.read.parquet(f"{src}/extracted"), id_col="url")
+    in_base = base_blocks.groupBy(F.col("bk").cast("string").alias("key")).count()
+    in_base = {r["key"]: r["count"] for r in in_base.filter(F.col("key").isin(list(dropped))).collect()}
+    assert dropped == {key: n + in_base[key] for key in dropped}
+    assert all(v > n for v in dropped.values())
     assert info["n_new_base_edges"] == 0
 
 
@@ -180,3 +187,13 @@ def test_block_over_the_cap_only_with_the_base_drops_its_batch_pairs(
     assert rows(read_triples(spark, inc)) == rows(read_triples(spark, full))
     mapping = spark.read.parquet(f"{inc}/increments/{info['batch']}/mapping").collect()
     assert all(r["url"] == r["canon_url"] for r in mapping)
+
+    def dropped(path):
+        rec = spark.read.parquet(path).filter(F.col("metric") == "lsh_block_dropped")
+        return sorted(map(tuple, rec.select("key", "value").collect()))
+
+    # no silent caps, and the same record a full run makes: every band's
+    # block dropped once, valued at its combined size k + m
+    want = dropped(f"{full}/_metrics_canon")
+    assert want == sorted((key, k + m) for key, _ in want) and len(want) == 32
+    assert dropped(f"{inc}/increments/{info['batch']}/_metrics_canon") == want

@@ -199,9 +199,9 @@ def test_deferred_merge_counts_component_bridges(spark):
          ("D", "base5"), ("E", "base5")],  # clean
         "url string, canon_url string",
     )
-    assert deferred_merge_count(node_comp, url_anchor) == 2
+    assert deferred_merge_count(node_comp, url_anchor).first()["value"] == 2
     clean = url_anchor.filter(F.col("url").isin("D", "E"))
-    assert deferred_merge_count(node_comp, clean) == 0
+    assert deferred_merge_count(node_comp, clean).first()["value"] == 0
 
 
 def test_auto_compaction_triggers_and_preserves_view(
